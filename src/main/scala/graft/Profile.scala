@@ -91,8 +91,7 @@ object Profile {
         val wall = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         Checkpoints.releaseAll()
-        // listenerBus is private[spark]; a short sleep drains the queue
-        Thread.sleep(300)
+        org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(prof)
         if (r == runs) { // report the last (warm) run
           println(f"%n=== $q run $r/$runs wall=$wall%.3f s | jobs=${prof.jobWall.size} stages=${prof.stages.size} ===")

@@ -115,6 +115,9 @@ object Dedup {
       case r: RDDScanExec => r.inputRDD.getNumPartitions // checkpointed frames
       case _: LocalTableScanExec => 1 // literal rows: spreading is cheap
       case _: LeafExecNode => unknown // in-memory scans etc.: assume wide
+      // a union concatenates its children's partitions (a union of
+      // co-partitioned shuffles is narrower; over-counting is the safe side)
+      case u: UnionExec => u.children.map(estimatedWidth(_, unknown)).sum
       case n => (n.children.map(estimatedWidth(_, unknown)) :+ 0).max
     }
   }
@@ -595,16 +598,18 @@ object Dedup {
     graft.Checkpoints.release(sigs)
   }
 
-  /** Per-generation memo of an index's `meta.parquet` hyperparameter row:
-    * the handshake is a pure function of the file's CONTENT, and
-    * re-reading the one-row parquet cost a ~0.3 s job PER increment (r18
-    * profile). The memo key embeds the meta directory's file listing
-    * (paths + mtimes + lengths — one driver fs call), so a rebuilt or
-    * externally rewritten meta file misses the memo and is re-read: the
+  /** Memo of an index's `meta.parquet` hyperparameter row, one entry per
+    * meta path holding its latest generation: the handshake is a pure
+    * function of the file's CONTENT, and re-reading the one-row parquet
+    * cost a ~0.3 s job PER increment (r18 profile). The generation is the
+    * meta directory's file listing (paths + mtimes + lengths — one driver
+    * fs call), so a rebuilt or externally rewritten meta file misses the
+    * memo, is re-read and REPLACES the entry (the memo grows with the
+    * number of index paths, not of rebuilds); the
     * different-hyperparameters refusal stays live (IncrementalDedupSpec
     * pins it). */
-  private val metaRowMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
+  private[graft] val metaRowMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.Row)]()
   private[graft] def readMetaRow(s: SparkSession, indexDir: String): org.apache.spark.sql.Row = {
     val metaPath = s"$indexDir/meta.parquet"
     val p = new org.apache.hadoop.fs.Path(metaPath)
@@ -612,8 +617,9 @@ object Dedup {
     val gen = fs.listStatus(p)
       .map(st => s"${st.getPath.getName}:${st.getModificationTime}:${st.getLen}")
       .sorted.mkString(",")
-    metaRowMemo.computeIfAbsent(s"$metaPath@$gen",
-      _ => s.read.parquet(metaPath).head())
+    metaRowMemo.compute(metaPath, (_, memo) =>
+      if (memo != null && memo._1 == gen) memo
+      else (gen, s.read.parquet(metaPath).head()))._2
   }
   private def minhashMeta(s: SparkSession, indexDir: String): (Int, Int) = {
     val r = readMetaRow(s, indexDir)

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.time.{Instant, ZoneId, ZoneOffset}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -15,28 +17,55 @@ import graft.functions.{Hll, SparseHll}
   * `date_trunc` severs the watermark→aggregation linkage that append mode
   * requires (SURVEY.md §8.4 gap 2).
   *
-  * Mechanism: `flatMapGroupsWithState` keyed by (granularity, bucket
-  * start), one fixed-size HLL register set per open bucket, and an
-  * EVENT-TIME TIMEOUT at the bucket's calendar end — when the watermark
-  * passes the bucket end, the bucket emits `(Type, Timestamp, Value)`
-  * exactly once and its state is freed. Late rows behind the watermark are
-  * filtered by Spark before they reach the operator (late-data drop), so a
-  * sealed bucket can never resurrect.
+  * Mechanism: ONE `flatMapGroupsWithState` operator over one row per
+  * event — `uid`, `event_time` and the array of its bucket starts, one
+  * per granularity, each `unix_timestamp(date_trunc(g, event_time))`
+  * computed in SQL in the session time zone. Every row carries the same
+  * constant key, so one state value holds every open
+  * `(granularity, start) → SparseHll` sketch as parallel arrays
+  * ([[OpenBuckets]]). A row hashes its uid once and adds the hash to one
+  * sketch per granularity, as the reference's processor updates its five
+  * sketches per message (`processor.go:67-102`). Every call — with rows or
+  * on timeout — emits `(Type, Timestamp, Value)` for each bucket with
+  * `bucketEnd(g, start) * 1000 < watermark` and drops it from the state,
+  * then sets the EVENT-TIME TIMEOUT to the earliest remaining bucket end,
+  * so the no-data batch that advances the watermark past a bucket end
+  * seals it. A bucket emits exactly once. Late rows behind the watermark
+  * are filtered by Spark before they reach the operator (late-data drop,
+  * counted once per event in `numRowsDroppedByWatermark`), so a sealed
+  * bucket can never resurrect.
   *
-  * Scale notes: state per open bucket is a [[graft.functions.SparseHll]]
-  * sketch — exact sorted-hash-set bytes while small, a dense 16 KiB HLL
-  * register file only past 512 distinct uids (the axiomhq two-mode design
-  * the reference depends on) — so total state is bounded by Σ min(uids,
-  * 512)×8B + dense-bucket count × 16 KiB, independent of stream length;
-  * keys hash-partition across executors.
+  * Scale notes: the stateful step runs in ONE task — like the reference's
+  * single process — while parsing and bucketing run on every partition
+  * ahead of the shuffle. Each micro-batch commits one operator's state
+  * stores (`spark.sql.shuffle.partitions`, all but one empty) instead of
+  * one set per granularity, and shuffles each event once. State is the
+  * open buckets only, bounded by the watermark delay: each sketch is a
+  * [[graft.functions.SparseHll]] — exact sorted-hash-set bytes while
+  * small, a dense 16 KiB HLL register file only past 512 distinct uids
+  * (the axiomhq two-mode design the reference depends on) — so total
+  * state is Σ min(uids, 512)×8B + dense-bucket count × 16 KiB over the
+  * open buckets, independent of stream length. Spreading the stateful
+  * step over executors would need keys finer than the query; one
+  * process's hashing rate is the reference's own ceiling.
+  *
+  * Checkpoints written before the operators were fused (five operators,
+  * one key per bucket) cannot be resumed by this plan; restart such a
+  * query from a fresh checkpoint and replay the topic from the start, as
+  * the reference does on every run (`README.md:5`).
+  *
   * Surviving-row invariant: a row reaching the operator has
-  * `event_time ≥ watermark`, and its bucket end > event_time, so the
-  * timeout timestamp is always strictly ahead of the watermark (required
-  * by `setTimeoutTimestamp`).
+  * `event_time ≥ watermark`, and its bucket end > event_time, so a row
+  * never lands in a bucket that is due to seal, and every remaining
+  * bucket end is at or ahead of the watermark (required by
+  * `setTimeoutTimestamp`).
   */
 object CalendarAppendWindows {
 
-  final case class BucketState(registers: Array[Byte])
+  /** Every open bucket: bucket `i` is `granularity(i)`'s bucket starting at
+    * `start(i)` (epoch seconds), with its sketch `sketch(i)`. */
+  final case class OpenBuckets(granularity: Array[String], start: Array[Long],
+                               sketch: Array[Array[Byte]])
 
   /** Calendar end (epoch seconds) of the bucket starting at `bucketStart`.
     * Calendar-true for month/year (java.time clamping is irrelevant here:
@@ -61,52 +90,85 @@ object CalendarAppendWindows {
     }).toInstant.getEpochSecond
   }
 
-  private def update(granularity: String, zone: ZoneId)(
-      key: Long, rows: Iterator[(Long, String, java.sql.Timestamp)],
-      state: GroupState[BucketState]): Iterator[StatMsg] =
-    if (state.hasTimedOut) {
-      val est = SparseHll.estimate(state.get.registers)
-      state.remove()
-      Iterator.single(StatMsg(s"${granularity}_count", key, est))
-    } else {
-      // sparse-until-threshold sketch: fine-grained buckets are mostly
-      // low-cardinality, so state stays ~bytes-per-uid instead of a dense
-      // 16 KiB register file per open bucket (measured 1.6x stream
-      // throughput on the reference benchmark workload, StreamBench)
-      var sketch = state.getOption.map(_.registers).getOrElse(SparseHll.empty())
-      rows.foreach(r => sketch = SparseHll.add(sketch, Hll.hash(r._2)))
-      state.update(BucketState(sketch))
-      state.setTimeoutTimestamp(bucketEnd(granularity, key, zone) * 1000L)
-      Iterator.empty
+  private def update(granularities: Seq[String], zone: ZoneId)(
+      key: Int, rows: Iterator[(String, java.sql.Timestamp, Array[Long])],
+      state: GroupState[OpenBuckets]): Iterator[StatMsg] = {
+    // per granularity: bucket start → sketch
+    val open = granularities.map(_ => mutable.LongMap.empty[Array[Byte]]).toArray
+    state.getOption.foreach { s =>
+      s.granularity.indices.foreach { i =>
+        val g = granularities.indexOf(s.granularity(i))
+        require(g >= 0, s"checkpointed ${s.granularity(i)} bucket; this query counts $granularities")
+        open(g)(s.start(i)) = s.sketch(i)
+      }
+    }
+    rows.foreach { case (uid, _, starts) =>
+      val h = Hll.hash(uid)
+      var g = 0
+      while (g < open.length) {
+        val buckets = open(g)
+        val start = starts(g)
+        buckets(start) = SparseHll.add(buckets.getOrElse(start, SparseHll.empty()), h)
+        g += 1
+      }
     }
 
-  /** One granularity's append-mode stream over `parsed` (`uid`,
-    * `event_time` — [[CardinalityStream.parse]] output). */
-  def aggregated(spark: SparkSession, parsed: DataFrame, granularity: String,
-                 watermark: String = "10 minutes"): Dataset[StatMsg] = {
+    val watermarkMs = state.getCurrentWatermarkMs()
+    val sealedStats = mutable.ArrayBuffer.empty[StatMsg]
+    val kept = mutable.ArrayBuffer.empty[(String, Long, Array[Byte])]
+    var earliestEndMs = Long.MaxValue
+    granularities.zipWithIndex.foreach { case (name, g) =>
+      open(g).toSeq.sortBy(_._1).foreach { case (start, sketch) =>
+        val endMs = bucketEnd(name, start, zone) * 1000L
+        if (endMs < watermarkMs)
+          sealedStats += StatMsg(s"${name}_count", start, SparseHll.estimate(sketch))
+        else {
+          kept += ((name, start, sketch))
+          earliestEndMs = math.min(earliestEndMs, endMs)
+        }
+      }
+    }
+    if (kept.isEmpty) state.remove()
+    else {
+      val (names, starts, sketches) = kept.unzip3
+      state.update(OpenBuckets(names.toArray, starts.toArray, sketches.toArray))
+      state.setTimeoutTimestamp(earliestEndMs)
+    }
+    sealedStats.iterator
+  }
+
+  /** The append-mode stream of `granularities` over `parsed` (`uid`,
+    * `event_time` — [[CardinalityStream.parse]] output): one stateful
+    * operator for all of them. */
+  private def windows(spark: SparkSession, parsed: DataFrame, granularities: Seq[String],
+                      watermark: String): Dataset[StatMsg] = {
     import spark.implicits._
     // date_trunc buckets in the SESSION time zone — bucket ends must be
     // computed in the same zone. Parsed ONCE here (ZoneId serializes into
     // the closure); SHORT_IDS because Spark accepts three-letter session
     // zones ("PST") that plain ZoneId.of rejects
     val zone = ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone, ZoneId.SHORT_IDS)
+    // event_time stays in the grouped rows: Spark's late-row filter in
+    // front of the state operator reads the watermarked column
     parsed.withWatermark("event_time", watermark)
-      .select(
-        unix_timestamp(date_trunc(granularity, col("event_time"))).as("bucket_start"),
-        col("uid"), col("event_time"))
-      .as[(Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
+      .select(col("uid"), col("event_time"),
+        array(granularities.map(g =>
+          unix_timestamp(date_trunc(g, col("event_time")))): _*).as("starts"))
+      .as[(String, java.sql.Timestamp, Array[Long])]
+      .groupByKey(_ => 0)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        update(granularity, zone))
+        update(granularities, zone))
   }
+
+  /** One granularity's append-mode stream over `parsed` (`uid`,
+    * `event_time` — [[CardinalityStream.parse]] output). */
+  def aggregated(spark: SparkSession, parsed: DataFrame, granularity: String,
+                 watermark: String = "10 minutes"): Dataset[StatMsg] =
+    windows(spark, parsed, Seq(granularity), watermark)
 
   /** All five granularities, one append-mode stream in the reference
     * output shape — the full O3 fan-out with watermark-bounded state. */
   def allGranularities(spark: SparkSession, parsed: DataFrame,
-                       watermark: String = "10 minutes"): DataFrame = {
-    import spark.implicits._
-    graft.core.Buckets.granularities
-      .map(g => aggregated(spark, parsed, g, watermark).toDF())
-      .reduce(_ unionAll _)
-  }
+                       watermark: String = "10 minutes"): DataFrame =
+    windows(spark, parsed, graft.core.Buckets.granularities, watermark).toDF()
 }

@@ -114,9 +114,9 @@ object DataDrivenWindows {
     * Parallelism is capped at 5 (one sequential pass per granularity) BY
     * DESIGN: the reference's flush rule is order-dependent, so exact parity
     * requires a single in-order scan per granularity. This tier exists for
-    * parity; the scalable tiers are [[graft.core.Cardinality]] (batch) and
-    * [[CalendarAppendWindows]] (streaming append), whose aggregations
-    * partition freely.
+    * parity; the scalable tiers are [[graft.core.Cardinality]] (batch),
+    * whose aggregations partition freely, and [[CalendarAppendWindows]]
+    * (streaming append), which keeps only watermark-bounded open buckets.
     */
   def batch(spark: SparkSession, msgs: Dataset[UserMsg]): Dataset[StatMsg] = {
     import spark.implicits._

@@ -389,6 +389,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
+    // drained on both sides, so only jobs posted by the probe itself count
+    org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = Dedup.spreadForCompute(withExchange)
@@ -396,7 +398,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       // would coalesce it to ~1 partition at this size), decided from
       // planning-time stats — never by executing the upstream stages
       assert(out ne withExchange, "small shuffled frame should spread")
-      Thread.sleep(500) // listener-bus drain
+      org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
       assert(jobs.get() == 0,
         s"width probe launched ${jobs.get()} job(s) — the r17 advice regression")
     } finally { spark.sparkContext.removeSparkListener(listener); () }
@@ -412,5 +414,34 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val ms = MemoryStream[String](spark)
     val sdf = ms.toDF()
     assert(Dedup.spreadForCompute(sdf) eq sdf, "streaming frame must pass through")
+  }
+
+  test("metaRowMemo keeps one entry per index dir and re-reads a rebuilt meta row") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("meta-memo").toString
+    def build(perms: Int): Unit =
+      Seq((perms, 32)).toDF("perms", "bands")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+    import scala.jdk.CollectionConverters._
+    def entries = Dedup.metaRowMemo.keySet.asScala.count(_.startsWith(dir))
+    build(128)
+    assert(Dedup.readMetaRow(spark, dir).getInt(0) == 128)
+    build(64)
+    assert(Dedup.readMetaRow(spark, dir).getInt(0) == 64, "stale row after a rebuild")
+    assert(entries == 1, s"memo holds $entries entries for one index dir")
+  }
+
+  test("estimatedWidth sums the widths of a union's children") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("union-width").toString
+    Seq(1L, 2L, 3L).toDF("doc_id").write.parquet(s"$dir/a")
+    Seq(4L, 5L).toDF("doc_id").write.parquet(s"$dir/b")
+    val a = spark.read.parquet(s"$dir/a")
+    val b = spark.read.parquet(s"$dir/b")
+    def width(df: org.apache.spark.sql.DataFrame) =
+      Dedup.estimatedWidth(df.queryExecution.sparkPlan, unknown = 1000)
+    val (wa, wb) = (width(a), width(b))
+    assert(wa >= 1 && wb >= 1)
+    assert(width(a.union(b)) == wa + wb)
   }
 }

@@ -373,6 +373,60 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  test("all granularities run as one state operator; a year-boundary advance seals each bucket once") {
+    import spark.implicits._
+    def utc(mo: Int, d: Int, h: Int, mi: Int, sec: Int, y: Int = 2016): Long =
+      java.time.LocalDateTime.of(y, mo, d, h, mi, sec).toEpochSecond(java.time.ZoneOffset.UTC)
+    def line(uid: String, ts: Long) = s"""{"uid":"$uid","ts":$ts}"""
+    val input = MemoryStream[String](spark)
+    val agg = graft.streaming.CalendarAppendWindows.allGranularities(
+      spark, CardinalityStream.parse(input.toDF()), watermark = "10 minutes")
+    val q = agg.writeStream.format("memory").queryName("calfused").outputMode("append").start()
+    def emitted() = spark.table("calfused").as[StatMsg].collect().toSeq
+    try {
+      // batch 1: one event each in June and on Dec 20 and Dec 27, then four
+      // on Dec 31 (uid a twice); the watermark lands at Dec 31 11:55:10
+      input.addData(line("f", utc(6, 15, 10, 0, 0)), line("e", utc(12, 20, 8, 0, 0)),
+        line("d", utc(12, 27, 9, 0, 0)), line("a", utc(12, 31, 12, 0, 0)),
+        line("b", utc(12, 31, 12, 0, 30)), line("c", utc(12, 31, 12, 5, 0)),
+        line("a", utc(12, 31, 12, 5, 10)))
+      q.processAllAvailable()
+      // only buckets ending behind the watermark have sealed
+      val first = Set(
+        StatMsg("minute_count", utc(6, 15, 10, 0, 0), 1), StatMsg("day_count", utc(6, 15, 0, 0, 0), 1),
+        StatMsg("week_count", utc(6, 13, 0, 0, 0), 1), StatMsg("month_count", utc(6, 1, 0, 0, 0), 1),
+        StatMsg("minute_count", utc(12, 20, 8, 0, 0), 1), StatMsg("day_count", utc(12, 20, 0, 0, 0), 1),
+        StatMsg("week_count", utc(12, 19, 0, 0, 0), 1),
+        StatMsg("minute_count", utc(12, 27, 9, 0, 0), 1), StatMsg("day_count", utc(12, 27, 0, 0, 0), 1))
+      assert(emitted().toSet == first)
+      // batch 2: two very-late lines (behind the watermark) and one on time
+      input.addData(line("late1", utc(12, 31, 11, 0, 0)), line("late2", utc(12, 27, 9, 0, 30)),
+        line("g", utc(12, 31, 12, 5, 20)))
+      q.processAllAvailable()
+      assert(emitted().toSet == first)
+      // batch 3: one advance to Feb 1 seals every bucket still open in 2016
+      input.addData(line("adv", utc(2, 1, 12, 0, 0, y = 2017)))
+      q.processAllAvailable()
+      val all = emitted()
+      assert(all.map(m => (m.Type, m.Timestamp)).distinct.size == all.size,
+        s"a bucket emitted twice: $all")
+      assert(all.toSet -- first == Set(
+        StatMsg("minute_count", utc(12, 31, 12, 0, 0), 2), // a b
+        StatMsg("minute_count", utc(12, 31, 12, 5, 0), 3), // c a g
+        StatMsg("day_count", utc(12, 31, 0, 0, 0), 4), // + b
+        StatMsg("week_count", utc(12, 26, 0, 0, 0), 5), // + d
+        StatMsg("month_count", utc(12, 1, 0, 0, 0), 6), // + e
+        StatMsg("year_count", utc(1, 1, 0, 0, 0), 7))) // + f
+      // one operator for all five granularities, and each very-late event
+      // is dropped (and counted) once
+      val batches = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        .groupBy(_.batchId).values.map(_.last).toSeq
+      assert(batches.nonEmpty && batches.forall(_.stateOperators.length == 1),
+        s"state operators per batch: ${batches.map(_.stateOperators.length)}")
+      assert(batches.map(_.stateOperators.head.numRowsDroppedByWatermark).sum == 2L)
+    } finally q.stop()
+  }
+
   test("streaming dedup drops duplicates within the watermark, state expires after") {
     import spark.implicits._
     val input = MemoryStream[String](spark)
