@@ -64,7 +64,15 @@ object Dedup {
     * added on a guess. Streaming frames pass through untouched
     * (`df.rdd` would throw AnalysisException on them; the increment entry
     * points are shared with foreachBatch bodies, which hand in batch
-    * frames — this guard is for the next streaming caller). */
+    * frames — this guard is for the next streaming caller).
+    *
+    * The shuffle-shaped branch decides from
+    * `optimizedPlan.stats.sizeInBytes`, a planning-time estimate. Without
+    * CBO an Aggregate's estimate is proportional to its CHILD's, not to
+    * its group count, so a small aggregate over a large input reads as
+    * big and passes through un-spread: the branch is only expected to
+    * fire at small (bench) scale. That costs idle cores, never a wrong
+    * result or an extra shuffle. */
   private[graft] def spreadForCompute(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
     if (df.isStreaming) return df

@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a graft main class against the compiled target without sbt.
 # usage: tools/run_class.sh <MainClass> [extra -D opts...]
+# The classpath is this checkout's target/ plus $SPARK_HOME/jars.
 CLS=$1; shift
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -12,4 +14,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-16g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC $JAVA_EXTRA \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$CLS" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?set SPARK_HOME to a Spark 4.1 install}/jars/*" "$CLS" "$@"
