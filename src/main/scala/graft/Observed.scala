@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.graftbridge.ObservationBridge
 
 /** Reader for `Dataset.observe` metrics on BATCH queries.
   *
@@ -21,12 +22,17 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 object Observed {
 
   /** All observation results reachable from the dataset's executed plan,
-    * keyed by observation name. Call AFTER an action has run. */
+    * keyed by observation name. Call AFTER an action has run on this very
+    * dataset. An observation whose node never ran is left out rather than
+    * read as zeros: `count()` executes a separate `groupBy().count()`
+    * plan, so after it the frame's own nodes report nothing. A node that
+    * ran but saw no rows is left out the same way. */
   def metrics(ds: Dataset[_]): Map[String, Row] = {
     var out = Map.empty[String, Row]
     def visit(p: SparkPlan): Unit = {
       p match {
-        case c: CollectMetricsExec => out += (c.name -> c.collectedMetrics)
+        case c: CollectMetricsExec =>
+          if (ObservationBridge.ran(c)) out += (c.name -> c.collectedMetrics)
         case a: AdaptiveSparkPlanExec => visit(a.executedPlan)
         case q: QueryStageExec => visit(q.plan)
         case t: InMemoryTableScanExec => visit(t.relation.cachedPlan)

@@ -1,1698 +1,64 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale experiments beyond the provided SFs: replicate sf0.1 inputs into
-  * /tmp and time the heaviest operators. Dev tool, not part of the driver
-  * contract. Three modes via SPARK_GRAFT_SCALE_MODE:
+/** Builds a k× IDENTICAL-replica copy of an SF directory, for timing the
+  * registered queries beyond the provided scale factors (SURVEY §8.5).
+  * A dev tool: no registered query calls it. Replicas are exact copies
+  * with shifted ids, so the dedup pair generators exhibit the documented
+  * quadratic-in-duplication law (that's the point: the numbers pin the
+  * law). `Bench` does the timing:
   *
-  *  - `battery` (default): the round-3/4 regression battery at
-  *    SPARK_GRAFT_SCALE_K× (default 10×) IDENTICAL replication — replicas
-  *    are exact copies, so the dedup pair generators exhibit the
-  *    documented quadratic-in-duplication law (that's the point: the
-  *    numbers pin the law).
-  *  - `compose`: the composition rule measured as one pipeline —
-  *    `exactDedup` → collapse to distinct texts → n-gram-Jaccard /
-  *    SimHash / embedding pair generation on the collapsed corpus. The
-  *    claim under test: after collapse, pair generation is join-bound
-  *    (≈ its cost on the unreplicated corpus), not output-bound, at ANY
-  *    replication factor. Run with K=10 and K=30+.
-  *  - `flagship`: the production scale paths at K=100×, with per-replica
-  *    VOCABULARY variation (every token gets a replica suffix), so
-  *    replicas share no shingles/spans/terms: true-duplication stays at
-  *    the corpus's own rate and the probe measures PLAN scaling, not the
-  *    Θ(k²·n) output of a copied corpus.
+  * {{{
+  * tools/run_class.sh graft.ScaleProbe      # SPARK_GRAFT_SCALE_K, default 10
+  * SPARK_GRAFT_SF_DIR=/tmp/sf10x SPARK_GRAFT_BENCH_ONLY=<list> \
+  *   SPARK_GRAFT_BENCH_RUNS=1 SPARK_GRAFT_CPUS=32 tools/run_class.sh graft.Bench
+  * }}}
   */
 object ScaleProbe {
-  /** Drop EVERY `.built_*` corpus-cache marker (rich and varied) in `dir`:
-    * any rebuild of `documents.parquet` invalidates all modes' caches, so a
-    * marker from another mode surviving a rebuild would let that mode
-    * silently train on the wrong corpus. */
-  private def clearBuiltMarkers(dir: java.io.File): Unit =
-    Option(dir.listFiles).toSeq.flatten
-      .filter(_.getName.startsWith(".built_")).foreach(_.delete())
+  /** Writes `k` replicas of `src`'s documents, embeddings, events, orders
+    * and lineitem to `dst`, plus unreplicated copies of the dimension
+    * tables, so `dst` holds every [[Tables.all]] table. Ids are shifted
+    * per replica by offsets above every id in sf0.1, so replicas never
+    * collide; event users are shifted too, so replica users are disjoint
+    * and every per-bucket distinct count grows exactly k×. lineitem/orders
+    * replicate against the SAME part and customer dims: per-dim groups
+    * grow k× — the correlated-agg and outer-join-distribution scaling
+    * shape. */
+  def build(spark: SparkSession, src: String, dst: String, k: Int): Unit = {
+    /** k× replication via a broadcast range cross-join (one scan, no k-way
+      * union plan). The write repartitions: the cross-join multiplies rows
+      * WITHIN each input partition, and a handful of fat output files would
+      * cap every downstream map stage's parallelism at the file count
+      * (measured: 6× slowdown on the pair generators) — exactly the
+      * small-files-in-reverse lesson a 100 TB layout encodes as "write
+      * enough splits for the readers you expect". */
+    def writeReplicated(table: String, shifts: (String, Long)*): Unit =
+      shifts.foldLeft(Tables(spark, src, table).crossJoin(spark.range(k).toDF("rep"))) {
+        case (df, (c, step)) => df.withColumn(c, col(c) + col("rep") * step)
+      }.drop("rep").repartition(64).write.mode("overwrite").parquet(s"$dst/$table.parquet")
+
+    writeReplicated("documents", "doc_id" -> 1000000L)
+    writeReplicated("embeddings", "vec_id" -> 1000000L)
+    writeReplicated("events", "user_id" -> 10000L, "event_id" -> 10000000L)
+    writeReplicated("lineitem", "l_orderkey" -> 100000000L)
+    writeReplicated("orders", "o_orderkey" -> 100000000L)
+    Seq("region", "nation", "supplier", "part", "customer").foreach { t =>
+      Tables(spark, src, t).write.mode("overwrite").parquet(s"$dst/$t.parquet")
+    }
+  }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = SparkSession.builder().master("local[*]")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "10").toInt
-    val mode = sys.env.getOrElse("SPARK_GRAFT_SCALE_MODE", "battery")
-    val dst = s"/tmp/sf${k}x_$mode"
-
-    def time2[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE${k}X[$mode] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    def time(name: String)(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"SCALE${k}X[$mode] $name: $sec%.2f s")
-      sec
-    }
-    def runQuery(name: String, dir: String): Unit = {
-      time(name)(SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save())
-      spark.catalog.clearCache()
-      Checkpoints.releaseAll()
-    }
-    /** k× replication via a broadcast range cross-join (one scan, no
-      * k-way union plan); ids are shifted per replica at the call sites so
-      * replicas never collide. The write repartitions: the cross-join
-      * multiplies rows WITHIN each input partition, and a handful of fat
-      * output files would cap every downstream map stage's parallelism at
-      * the file count (measured: 6× slowdown on the pair generators) —
-      * exactly the small-files-in-reverse lesson a 100 TB layout encodes
-      * as "write enough splits for the readers you expect". */
-    def replicate(df: DataFrame, rep: Int): DataFrame =
-      df.crossJoin(spark.range(rep).toDF("rep"))
-    def writeReplicated(df: DataFrame, path: String): Unit =
-      df.repartition(64).write.mode("overwrite").parquet(path)
-
-    def buildDocs(varied: Boolean): Unit = {
-      val d = replicate(Tables(spark, src, "documents"), k)
-        .withColumn("doc_id", col("doc_id") + col("rep") * 1000000L)
-      val out =
-        if (!varied) d.drop("rep")
-        else d
-          // suffix every token with the replica id: replicas share NO
-          // vocabulary, so shingle/span/term statistics scale with corpus
-          // size while true duplication stays at the base corpus's rate
-          .withColumn("text",
-            regexp_replace(col("text"), lit("([^ ]+)"), concat(lit("$1x"), col("rep"))))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-          .drop("rep")
-      writeReplicated(out, s"$dst/documents.parquet")
-    }
-    def buildEmbeddings(varied: Boolean = false): Unit = {
-      val e = replicate(Tables(spark, src, "embeddings"), k)
-        .withColumn("vec_id", col("vec_id") + col("rep") * 1000000L)
-      val out =
-        if (!varied) e.drop("rep")
-        else {
-          // HARD geometry (r7 verdict: ±0.05 perturbed replicas sit in a
-          // tight cloud around their base vector — same IVF list as their
-          // query, recall trivially 1.0). Each replica is instead an
-          // INTERPOLATED MIXTURE of its base vector and a hash-picked
-          // partner base vector, with mixing weight α ∈ [0.05, 0.95): the
-          // mixture population fills the segments BETWEEN base clusters,
-          // so coarse-quantizer boundaries cut through true neighbor sets
-          // and recall becomes a real function of nProbe. rep=0 keeps the
-          // originals (α=0) — the demo queries (vec_id < 5) and their base
-          // neighbors stay fixed across scales.
-          // (interpreted HOF is fine here — one-time build, not a query)
-          val base = Tables(spark, src, "embeddings")
-            .select(col("vec_id").as("p_id"), col("embedding").as("pvec"))
-          val nBase = base.count()
-          e.withColumn("p_id",
-              pmod(col("vec_id") * lit(2654435761L) + col("rep") * lit(40503L), lit(nBase)))
-            .join(broadcast(base), Seq("p_id"))
-            .withColumn("alpha", when(col("rep") === 0, lit(0.0)).otherwise(
-              (pmod(col("rep") * lit(48271L) + col("vec_id") * lit(97L), lit(900L))
-                .cast("double") + lit(50.0)) / lit(1000.0)))
-            .withColumn("embedding", zip_with(col("embedding"), col("pvec"), (x, y) =>
-              ((lit(1.0) - col("alpha")) * x.cast("double") +
-                col("alpha") * y.cast("double")).cast("float")))
-            .drop("rep", "p_id", "pvec", "alpha")
-        }
-      writeReplicated(out, s"$dst/embeddings.parquet")
-    }
-    def buildEvents(): Unit =
-      writeReplicated(
-        replicate(Tables(spark, src, "events"), k)
-          .withColumn("user_id", col("user_id") + col("rep") * 10000L)
-          .withColumn("event_id", col("event_id") + col("rep") * 10000000L).drop("rep"),
-        s"$dst/events.parquet")
-    def buildTpch(): Unit = {
-      // lineitem/orders replicate with shifted orderkeys against the SAME
-      // part/customer dims: per-dim groups grow k× — the correlated-agg
-      // and outer-join-distribution scaling shape
-      writeReplicated(
-        replicate(Tables(spark, src, "lineitem"), k)
-          .withColumn("l_orderkey", col("l_orderkey") + col("rep") * 100000000L).drop("rep"),
-        s"$dst/lineitem.parquet")
-      writeReplicated(
-        replicate(Tables(spark, src, "orders"), k)
-          .withColumn("o_orderkey", col("o_orderkey") + col("rep") * 100000000L).drop("rep"),
-        s"$dst/orders.parquet")
-      Tables(spark, src, "part").write.mode("overwrite").parquet(s"$dst/part.parquet")
-      Tables(spark, src, "customer").write.mode("overwrite").parquet(s"$dst/customer.parquet")
-    }
-
-    mode match {
-      case "battery" =>
-        time("build") { buildDocs(varied = false); buildEmbeddings(); buildEvents(); buildTpch() }
-        // q_dedup_embedding deliberately ABSENT: on an identically
-        // replicated corpus every replica pair is a TRUE near-dup
-        // (cos = 1) — output Θ(k²·n), output-bound not plan-bound; the
-        // `compose` mode measures its post-collapse cost instead.
-        // clusters/clusters_star consume the replica-merged pair graph
-        // (edges ~k², the duplication law) — timings are against a
-        // ~k²-edge input.
-        for (q <- Seq("q_card_stats_all", "q_card_sketch_rollup", "q_card_minute_approx",
-                      "q_dedup_minhash_lsh", "q_dedup_ngram_jaccard", "q_dedup_simhash",
-                      "q_text_langid", "q_stream_data_driven",
-                      "q_dedup_contamination", "q_text_tfidf",
-                      "q_text_seq_pack", "q_text_pii_scrub", "q_text_langid_trigram",
-                      "q_sim_ann_ivf",
-                      "q_dedup_spans", "q_text_outliers", "q_rel_avg_subquery",
-                      "q_stream_data_driven_exact", "q_dedup_clusters", "q_dedup_clusters_star",
-                      "q_sim_ann_lsh", "q_emb_jl_project",
-                      "q_text_dup_ngrams", "q_sample_token_budget", "q_rel_cust_dist",
-                      "q_tmp_funnel", "q_tmp_retention", "q_tmp_event_paths",
-                      "q_text_gopher_gates", "q_sample_temperature_mix",
-                      "q_pipeline_curation", "q_emb_pq_encode", "q_emb_pq_adc",
-                      "q_sim_ann_ivf_pq", "q_dedup_substrings", "q_pipeline_curation_full",
-                      "q_dedup_pipeline_lsh",
-                      // round-12 additions: span removal (keyed like
-                      // q_dedup_spans but carries text through the
-                      // join-back), shard layout (map-only + per-shard
-                      // windows), leak split (pairs + CC + hash)
-                      "q_dedup_span_removal", "q_sample_shard_layout",
-                      "q_sample_leak_split"))
-          runQuery(q, dst)
-
-      case "compose" =>
-        time("build") { buildDocs(varied = false); buildEmbeddings() }
-        val cdir = s"$dst/collapsed"
-        // reference points: the pair generators on the UNREPLICATED corpus
-        // (the collapsed corpus ≈ sf0.1's distinct texts, so "join-bound
-        // after collapse" means ≈ these timings)
-        val base = Map(
-          "jaccard" -> time("base_sf0.1_jaccard") {
-            graft.operators.Dedup.ngramJaccardPairs(spark, src)
-              .write.format("noop").mode("overwrite").save() },
-          "simhash" -> time("base_sf0.1_simhash") {
-            graft.operators.Dedup.simhashPairs(spark, src)
-              .write.format("noop").mode("overwrite").save() },
-          "embedding" -> time("base_sf0.1_embedding") {
-            graft.operators.Dedup.embeddingNearDupPairs(spark, src)
-              .write.format("noop").mode("overwrite").save() },
-          "clusters" -> time("base_sf0.1_clusters") {
-            graft.operators.Dedup.clusterPairs(
-              graft.operators.Dedup.ngramJaccardPairs(spark, src))
-              .write.format("noop").mode("overwrite").save() })
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        // stage 1: exact dedup + collapse, materialized like a production
-        // pipeline would (the collapsed corpus is reused by every
-        // downstream pass, so its write cost amortizes)
-        val tCollapse = time("compose_collapse") {
-          val d = Tables(spark, dst, "documents")
-          val keep = d.groupBy(md5(col("text")).as("h"))
-            .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-          d.join(keep, "doc_id").write.mode("overwrite").parquet(s"$cdir/documents.parquet")
-          val e = Tables(spark, dst, "embeddings")
-          val keepV = e.groupBy(col("embedding"))
-            .agg(min(col("vec_id")).as("vec_id")).select("vec_id")
-          e.join(keepV, "vec_id").write.mode("overwrite").parquet(s"$cdir/embeddings.parquet")
-        }
-        val nDocs = spark.read.parquet(s"$cdir/documents.parquet").count()
-        val nVecs = spark.read.parquet(s"$cdir/embeddings.parquet").count()
-        println(s"SCALE${k}X[compose] collapsed: $nDocs docs, $nVecs vecs")
-        // stage 2: pair generation on the collapsed corpus — the claim is
-        // each stays ≈ its unreplicated-corpus cost (≤ ~1.5×)
-        val composed = Map(
-          "jaccard" -> time("compose_jaccard") {
-            graft.operators.Dedup.ngramJaccardPairs(spark, cdir)
-              .write.format("noop").mode("overwrite").save() },
-          "simhash" -> time("compose_simhash") {
-            graft.operators.Dedup.simhashPairs(spark, cdir)
-              .write.format("noop").mode("overwrite").save() },
-          "embedding" -> time("compose_embedding") {
-            graft.operators.Dedup.embeddingNearDupPairs(spark, cdir)
-              .write.format("noop").mode("overwrite").save() },
-          // the full dedup composition: pairs on the collapsed corpus feed
-          // connected components — input-bound on the (now small) pair
-          // stream, completing the exactDedup → pairs → clusters story
-          "clusters" -> time("compose_clusters") {
-            graft.operators.Dedup.clusterPairs(
-              graft.operators.Dedup.ngramJaccardPairs(spark, cdir))
-              .write.format("noop").mode("overwrite").save() })
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        composed.foreach { case (name, sec) =>
-          println(f"SCALE${k}X[compose] ratio_$name: ${sec / base(name)}%.2f (collapse ${tCollapse}%.2f s amortized over all passes)")
-        }
-
-      case "flagship" =>
-        // SPARK_GRAFT_SCALE_STAGE=recall reuses an existing flagship build
-        // and runs only the ANN-recall readout (the build + query sweep is
-        // the expensive part; recall iteration shouldn't repay it)
-        val stage = sys.env.getOrElse("SPARK_GRAFT_SCALE_STAGE", "all")
-        if (stage == "requery") {
-          // re-run an existing build's query sweep without paying the build
-          // (for contended-host reruns: same queries, same corpus, fresh
-          // timings — comma-list override via SPARK_GRAFT_SCALE_QUERIES)
-          require(new java.io.File(s"$dst/documents.parquet").exists,
-            s"no flagship build at $dst — run without SPARK_GRAFT_SCALE_STAGE first")
-          val qs = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
-            .map(_.split(',').toSeq).getOrElse(Seq(
-              "q_dedup_minhash_lsh", "q_dedup_spans", "q_dedup_substrings",
-              "q_sample_token_budget", "q_text_tfidf",
-              "q_text_gopher_gates", "q_pipeline_curation"))
-          qs.foreach(runQuery(_, dst))
-        } else if (stage == "embbuild") {
-          // embeddings-only build: enough for a recall-stage rerun at a k
-          // where no full flagship build exists (the doc-side queries are
-          // not repaid just to measure ANN recall)
-          time("build")(buildEmbeddings(varied = true))
-        } else if (stage != "recall") {
-          time("build") { buildDocs(varied = true); buildEmbeddings(varied = true) }
-          println(s"SCALE${k}X[flagship] docs=${spark.read.parquet(s"$dst/documents.parquet").count()}" +
-            s" vecs=${spark.read.parquet(s"$dst/embeddings.parquet").count()}")
-          for (q <- Seq("q_dedup_minhash_lsh", "q_dedup_spans", "q_dedup_substrings",
-                        "q_sample_token_budget", "q_text_tfidf",
-                        "q_text_gopher_gates", "q_pipeline_curation",
-                        // embedding paths on the perturbed-replica population
-                        "q_emb_pq_encode", "q_emb_pq_adc", "q_sim_ann_lsh",
-                        "q_emb_jl_project", "q_sim_ann_ivf_pq"))
-            runQuery(q, dst)
-          // the REGISTERED production dedup pipeline, first-class at k×,
-          // with its LSH trim telemetry read out (skew/trim reading for
-          // the §8.5.2 row — candidates shed is the skew signal)
-          time("q_dedup_pipeline_lsh") {
-            val df = SparkEntry.queries("q_dedup_pipeline_lsh")(spark, dst)
-            df.write.format("noop").mode("overwrite").save()
-            Observed.metrics(df).foreach { case (name, row) =>
-              if (name.startsWith("graft_lsh_trim_"))
-                println(s"SCALE${k}X[flagship] pipeline_lsh trim: " +
-                  s"hot_buckets=${row.getAs[Long]("n_hot_buckets")} " +
-                  s"trimmed_rows=${row.getAs[Long]("n_trimmed_rows")}")
-            }
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          // clusters on the PRODUCTION pair path (LSH candidates), not the
-          // exact-Jaccard stream the oracle tier uses
-          time("clusters_on_lsh_pairs") {
-            graft.operators.Dedup.clusterPairs(
-              graft.operators.Dedup.minhashLshPairs(spark, dst))
-              .write.format("noop").mode("overwrite").save()
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-        // ANN QUALITY at scale, not just cost: recall@10 vs brute force on
-        // the 100× population, at the bench partitioning (8 lists, probe 2)
-        // and at the §8.5.4 sizing rule's setting for this corpus size
-        // (finer partitioning, same 0.25 scanned fraction)
-        if (stage != "requery" && stage != "embbuild") {
-        require(new java.io.File(s"$dst/embeddings.parquet").exists,
-          s"no flagship build at $dst — run without SPARK_GRAFT_SCALE_STAGE first")
-        // 100-query panel (vec_id < 100 are all rep=0 base vectors): 1000
-        // neighbor slots give the curve 0.001 granularity — the registered
-        // queries keep their 5-query demo panel, this is measurement-only
-        val nQ = 100
-        val brute = graft.operators.Similarity.bruteForceTopK(spark, dst, nQueries = nQ)
-          .collect()
-          .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        def recallOf(nc: Int, np: Int, rerank: Int): Double = {
-          val got = graft.operators.Similarity
-            .annIvfPq(spark, dst, nProbe = np, nCentroids = nc, rerank = rerank,
-              nQueries = nQ).collect()
-            .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          val rs = brute.keys.toSeq.map(q =>
-            got.getOrElse(q, Set.empty).intersect(brute(q)).size.toDouble / brute(q).size)
-          rs.sum / rs.size
-        }
-        // recall/nProbe CURVE (r7 verdict #4): fixed partitioning, rising
-        // probe count — the §8.5.4 law is recall beating the scanned
-        // fraction at every point, not a single 1.0 on easy geometry.
-        // rerank=0 rows apply the ADAPTIVE shortlist rule (r10 verdict
-        // #7): rerank = max(50, 5·k·nProbe) — the residual ~0.005 at 32
-        // lists was re-rank-shortlist-bound, so the shortlist must grow
-        // with the probed candidate pool, not stay a constant.
-        // SPARK_GRAFT_RECALL_ROWS="nc:np:rerank,..." overrides for
-        // targeted reruns.
-        val rows = sys.env.get("SPARK_GRAFT_RECALL_ROWS")
-          .map(_.split(",").toSeq.map { r =>
-            val Array(a, b, c) = r.split(":"); (a.toInt, b.toInt, c.toInt) })
-          .getOrElse(Seq((8, 1, 50), (8, 2, 50), (8, 4, 50), (32, 4, 50),
-            (32, 8, 50), (32, 16, 50), (32, 4, 0), (32, 8, 0), (32, 16, 0)))
-        for ((nc, np, rr) <- rows) {
-          val rerank = if (rr == 0) math.max(50, 5 * 10 * np) else rr
-          val sec0 = System.nanoTime()
-          val r = recallOf(nc, np, rerank)
-          println(f"SCALE${k}X[flagship] ivfpq_recall_nc${nc}_np${np}_rr$rerank: $r%.3f " +
-            f"(scanned ~${np.toDouble / nc}%.2f, ${(System.nanoTime() - sec0) / 1e9}%.1f s)")
-        }
-        }
-
-      case "clusterseq" =>
-        // The DECISION layer under repetition and deletion (round 12,
-        // §8.5.9 extension): ten sequential cluster-state merges must stay
-        // ≈ flat per merge AND the final persisted state must equal a
-        // one-shot build over the whole corpus (the IncrementalDedupSpec
-        // convergence law, demonstrated at corpus grain); then a takedown
-        // of one batch is priced (rewrite-filter + touched-component state
-        // re-derivation) and checked against the rebuild-without-deleted.
-        time("build")(buildDocs(varied = true))
-        val dcl = Tables(spark, dst, "documents")
-        val idxC = s"$dst/mhidx_cluster"
-        locally {
-          val p = new org.apache.hadoop.fs.Path(idxC)
-          val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsys.exists(p)) fsys.delete(p, true)
-        }
-        val inBaseC = col("doc_id") >= 1000000L || col("doc_id") % 20 < 10
-        time("index_build") {
-          graft.operators.Dedup.buildMinhashIndex(spark,
-            dcl.filter(inBaseC), idxC, s"$dst#cl-base")
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        // 64 state partitions (not the 16 default): the probe's merge rows
-        // carry the mergeTouched telemetry line, and a finer grain shows
-        // the rewrote-k/N fraction instead of saturating at small N
-        time("cluster_state_build") {
-          graft.operators.Dedup.buildClusterState(spark, idxC, nParts = 64)
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        for (j <- 0 until 10) {
-          val batch = dcl.filter(col("doc_id") < 1000000L && col("doc_id") % 20 === (10 + j))
-          time(f"cluster_merge_$j%02d") {
-            graft.operators.Dedup.clusterIncrement(spark, batch, idxC,
-              s"$dst#cl$j", append = true).write.format("noop").mode("overwrite").save()
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-        val incState = spark.read.parquet(s"$idxC/clusters.parquet")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        // one-shot ground truth over the whole corpus
-        val idxFullC = s"$dst/mhidx_cluster_full"
-        locally {
-          val p = new org.apache.hadoop.fs.Path(idxFullC)
-          val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsys.exists(p)) fsys.delete(p, true)
-        }
-        graft.operators.Dedup.buildMinhashIndex(spark, dcl, idxFullC, s"$dst#cl-all")
-        graft.operators.Dedup.buildClusterState(spark, idxFullC)
-        val fullState = spark.read.parquet(s"$idxFullC/clusters.parquet")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        println(s"SCALE${k}X[clusterseq] after 10 merges: state rows ${incState.size}, " +
-          s"== one-shot full build: ${incState == fullState}")
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        // takedown: delete one batch slice from the merged index + state
-        val delIds = dcl.filter(col("doc_id") < 1000000L && col("doc_id") % 20 === 10)
-          .select(col("doc_id"))
-        time("delete_batch") {
-          graft.operators.Dedup.deleteFromDedupIndex(spark, idxC, delIds)
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val delState = spark.read.parquet(s"$idxC/clusters.parquet")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val idsGone = delIds.collect().map(_.getLong(0)).toSet
-        graft.operators.Dedup.buildMinhashIndex(spark,
-          dcl.filter(!(col("doc_id") < 1000000L && col("doc_id") % 20 === 10)),
-          idxFullC, s"$dst#cl-surv")
-        graft.operators.Dedup.buildClusterState(spark, idxFullC)
-        val survState = spark.read.parquet(s"$idxFullC/clusters.parquet")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        println(s"SCALE${k}X[clusterseq] post-delete state rows ${delState.size} " +
-          s"(no deleted ids: ${delState.forall(p => !idsGone(p._1))}), " +
-          s"== rebuild-without-deleted: ${delState == survState}")
-
-      case "appendpq" =>
-        // IVF-PQ append at scale and over repetition (round-12 verdict
-        // task 6): a FIXED batch (the vec_id%10==9 slice of replica 0,
-        // ~500 vectors at every k) appended to an index that grows with
-        // k — run the mode at two k values and append cost must stay
-        // flat while index build grows ∝ corpus. Then the REPETITION leg:
-        // the same batch split into 5 sequential appends, after which the
-        // multi-appended index must serve IDENTICAL results to a fresh
-        // same-model rebuild (the per-vector purity law, demonstrated at
-        // hard interpolated-mixture geometry where drift would actually
-        // show), with recall@10 vs brute force reported for both.
-        time("build")(buildEmbeddings(varied = true))
-        val ee = Tables(spark, dst, "embeddings")
-        val isB = col("vec_id") < 1000000L && col("vec_id") % 10 === 9
-        val oldE = ee.filter(!isB)
-        val nOldE = oldE.count(); val nBatch = ee.filter(isB).count()
-        // the production shape: FULL model (centroids + residual
-        // codebooks) learned on the old corpus only, frozen for appends
-        val (cents, books) = graft.operators.Similarity.learnIvfPqModel(spark, oldE)
-        def freshDir(name: String): String = {
-          val p = new org.apache.hadoop.fs.Path(s"$dst/$name")
-          val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsys.exists(p)) fsys.delete(p, true)
-          p.toString
-        }
-        val idxOne = freshDir("pqidx_one")
-        val tIdx = time("index_build") {
-          graft.operators.Similarity.buildIvfPqIndexOver(spark, oldE, idxOne, cents, books)
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val tApp = time("append_batch") {
-          graft.operators.Similarity.appendToIvfPqIndex(spark, ee.filter(isB), idxOne)
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        println(f"SCALE${k}X[appendpq] batch $nBatch onto $nOldE-vector index: " +
-          f"append ${tApp}%.2f s vs index build ${tIdx}%.2f s")
-        // repetition leg: 5 sequential sub-batch appends
-        val idxMulti = freshDir("pqidx_multi")
-        graft.operators.Similarity.buildIvfPqIndexOver(spark, oldE, idxMulti, cents, books)
-        for (j <- 0 until 5) {
-          time(f"append_sub_$j") {
-            // batch ids are ≡9 (mod 10); sub-batch j = ids ≡ 9+10j (mod 50)
-            // (integer modulo — col/10 would be DOUBLE division)
-            graft.operators.Similarity.appendToIvfPqIndex(spark,
-              ee.filter(isB && col("vec_id") % 50 === (9 + 10 * j)), idxMulti)
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-        val idxFull = freshDir("pqidx_full")
-        graft.operators.Similarity.buildIvfPqIndexOver(spark, ee, idxFull, cents, books)
-        val nQr = 100
-        def rowsOf(idx: String): Map[Long, Set[Long]] = {
-          val m = graft.operators.Similarity
-            .annIvfPqSearch(spark, dst, idx, nProbe = 2, nQueries = nQr).collect()
-            .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          m
-        }
-        val multiRows = rowsOf(idxMulti)
-        val fullRows = rowsOf(idxFull)
-        val brutePq = graft.operators.Similarity
-          .bruteForceTopK(spark, dst, nQueries = nQr).collect()
-          .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        def recallVs(got: Map[Long, Set[Long]]): Double = {
-          val rs = brutePq.keys.toSeq.map(q =>
-            got.getOrElse(q, Set.empty).intersect(brutePq(q)).size.toDouble / brutePq(q).size)
-          rs.sum / rs.size
-        }
-        println(f"SCALE${k}X[appendpq] after 5 appends: identical to same-model " +
-          f"rebuild = ${multiRows == fullRows}; recall@10 multi ${recallVs(multiRows)}%.3f " +
-          f"vs rebuild ${recallVs(fullRows)}%.3f over $nQr queries")
-
-      case "pqtrain" =>
-        // marginal PQ-training iteration cost on sf0.1 residual-free input:
-        // with the broadcast-codebook join assign the per-iteration plan is
-        // byte-identical, so cost(iters=n) − cost(iters=1) should be n−1
-        // small flat steps (data only), not n Janino recompiles
-        val sample = graft.operators.Similarity.pqTrainingSample(spark, src)
-        for (iters <- Seq(1, 2, 4, 8)) {
-          val t = time(s"pq_train_iters_$iters") {
-            graft.operators.Similarity.learnPqCodebooks(spark, sample, iters = iters)
-          }
-          if (iters > 1) println(f"SCALE${k}X[pqtrain] marginal_per_iter_at_$iters: ${t / iters}%.3f s")
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-
-      case "skew" =>
-        // adversarial duplication at k× the LshSkewSpec scale, exercising
-        // BOTH defense layers of the minhash path at once:
-        //  - cluster A (30% of the corpus, 400k docs at k=1000×... at k=10
-        //    4 000 docs) shares a 30-token base — PRECONDITION k >= 3: only
-        //    then does 400·k exceed HotShingleCap (1000) so its shingles
-        //    are shed by the FIRST layer before signatures exist and the
-        //    Θ(|A|²) quadratic never forms (and only then is the layer-1
-        //    telemetry line below expected; at k <= 2 cluster A is caught
-        //    by the bucket cap instead and the line is legitimately absent);
-        //  - cluster B (800 docs, UNDER the shingle cap) survives to
-        //    banding and emits its bounded Θ(|B|²) pairs — the quadratic
-        //    the caps permit is bounded per cluster by
-        //    min(HotShingleCap, HotBucketCap)², independent of corpus
-        //    size.
-        // The probe prints both trim telemetries and the candidate count;
-        // the structural claim (no minhash band bucket can exceed
-        // HotShingleCap members — every bucket member carries the
-        // bucket's argmin shingles) is documented on invertedIndex.
-        val nHot = 400 * k
-        val nB = 800
-        val nCold = 600 * k
-        time("build") {
-          val base = (0 until 30).map(i => s"tok$i").mkString(" ")
-          val baseB = (0 until 30).map(i => s"btk$i").mkString(" ")
-          val hot = spark.range(nHot).select(col("id").as("doc_id"),
-            concat(lit(base + " uniq"), col("id").cast("string")).as("text"))
-          val clusterB = spark.range(nB).select((col("id") + nHot).as("doc_id"),
-            concat(lit(baseB + " uniq"), col("id").cast("string")).as("text"))
-          val cold = spark.range(nCold).select((col("id") + nHot + nB).as("doc_id"),
-            concat_ws(" ", (0 until 30).map(j =>
-              concat(lit("w"), col("id").cast("string"), lit(s"_$j"))): _*).as("text"))
-          writeReplicated(
-            hot.unionByName(clusterB).unionByName(cold)
-              .withColumn("lang", lit("en")).withColumn("source", lit("skewfix"))
-              .withColumn("n_chars", length(col("text")).cast("long")),
-            s"$dst/documents.parquet")
-        }
-        val df = graft.operators.Dedup.minhashLshPairs(spark, dst)
-        var n = 0L
-        time("lsh_pairs") { n = df.count() }
-        Observed.metrics(df).foreach { case (name, row) =>
-          if (name.startsWith("graft_shingle_trim_"))
-            println(s"SCALE${k}X[skew] shingle trim (layer 1): " +
-              s"hot_shingles=${row.getAs[Long]("n_hot_shingles")} " +
-              s"dropped_postings=${row.getAs[Long]("n_dropped_postings")}")
-          if (name.startsWith("graft_lsh_trim_"))
-            println(s"SCALE${k}X[skew] bucket trim (layer 2): " +
-              s"hot_buckets=${row.getAs[Long]("n_hot_buckets")} " +
-              s"trimmed_rows=${row.getAs[Long]("n_trimmed_rows")}")
-        }
-        val expectB = nB.toLong * (nB - 1) / 2
-        println(s"SCALE${k}X[skew] candidates: $n (cluster A quadratic would be " +
-          s"${nHot.toLong * (nHot - 1) / 2}; permitted cluster-B bound $expectB)")
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-
-      case "incdedup" =>
-        // The persisted-index claim at corpus-grain (round-11 verdict
-        // task 1): on the vocab-varied k× corpus (no cross-replica dups —
-        // signature computation, not pair volume, is the dominant cost),
-        // a 1/5-of-range batch deduped against a prebuilt index must cost
-        // ≈ the batch-proportional share of signing plus probe overhead,
-        // NOT the full-corpus recompute — the search≪build criterion
-        // applied to dedup. At sf0.1 the same comparison is overhead-
-        // bound (3.2 s vs 2.5 s — both floors of ~6 local job launches);
-        // this probe is where the corpus-grain term is visible.
-        // The batch is a FIXED 500 docs — a modulus slice of replica 0,
-        // so its near-dup partners live ~90% in the indexed corpus (the
-        // realistic daily-batch shape: new docs duplicating history, not
-        // a vocabulary-disjoint island). Because the batch is fixed while
-        // k grows the index, running this mode at two k values exposes
-        // the law under measurement: full recompute grows ∝ corpus,
-        // increment stays ≈ flat (∝ batch + touched postings).
-        time("build")(buildDocs(varied = true))
-        val d = Tables(spark, dst, "documents")
-        val isBatch = col("doc_id") < 1000000L && col("doc_id") % 10 === 9
-        val tFull = time("full_minhash_pairs") {
-          graft.operators.Dedup.minhashLshPairs(spark, dst)
-            .write.format("noop").mode("overwrite").save()
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        // decision-layer baseline (r12 task 1): what a from-scratch daily
-        // run pays AFTER the pairs — full-corpus connected components
-        val tClusterFull = time("full_recluster") {
-          graft.operators.Dedup.clusterPairsStar(
-            graft.operators.Dedup.minhashLshPairs(spark, dst)
-              .select(col("doc_a"), col("doc_b")))
-            .write.format("noop").mode("overwrite").save()
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val idxDir = s"$dst/mhindex"
-        val nOld = d.filter(!isBatch).count()
-        val nNew = d.filter(isBatch).count()
-        val tBuild = time("index_build") {
-          graft.operators.Dedup.buildMinhashIndex(spark,
-            d.filter(!isBatch), idxDir, s"$dst#old")
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val tState = time("cluster_state_build") {
-          graft.operators.Dedup.buildClusterState(spark, idxDir)
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        // cluster merge over the old-only state BEFORE the pair-append leg
-        // mutates the index; fresh memoKey so batch signing is billed here
-        val tClusterInc = time("cluster_increment") {
-          val out = graft.operators.Dedup.clusterIncrement(spark,
-            d.filter(isBatch), idxDir, s"$dst#newc", append = false)
-          println(s"SCALE${k}X[incdedup] cluster increment labels: ${out.count()}")
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val tInc = time("increment_with_append") {
-          val out = graft.operators.Dedup.dedupIncrement(spark,
-            d.filter(isBatch), idxDir, s"$dst#new", append = true)
-          println(s"SCALE${k}X[incdedup] increment pairs: ${out.count()}")
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        println(f"SCALE${k}X[incdedup] batch ${nNew} of ${nOld + nNew} docs " +
-          f"(${nNew * 100.0 / (nOld + nNew)}%.1f%%): increment ${tInc}%.2f s vs " +
-          f"full recompute ${tFull}%.2f s (${tFull / tInc}%.1f x; index build ${tBuild}%.2f s " +
-          "paid once per corpus version)")
-        println(f"SCALE${k}X[incdedup] decision layer: cluster increment ${tClusterInc}%.2f s " +
-          f"vs full pairs+recluster ${tClusterFull}%.2f s (${tClusterFull / tClusterInc}%.1f x; " +
-          f"state build ${tState}%.2f s paid once per corpus version)")
-        // SIMHASH-wide family leg (round 12): same fixed batch, same law —
-        // run at two k values: full recompute re-fingerprints the corpus
-        // (∝ corpus), the increment fingerprints only the batch and probes
-        // stored postings (≈ flat)
-        val tShFull = time("full_simhash_wide_pairs") {
-          graft.operators.Dedup.simhashPairsWide(spark, dst)
-            .write.format("noop").mode("overwrite").save()
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val shIdx = s"$dst/shindex"
-        val tShBuild = time("simhash_index_build") {
-          graft.operators.Dedup.buildSimhashIndex(spark, d.filter(!isBatch), shIdx)
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val tShInc = time("simhash_increment") {
-          val out = graft.operators.Dedup.simhashDedupIncrement(spark,
-            d.filter(isBatch), shIdx)
-          println(s"SCALE${k}X[incdedup] simhash increment pairs: ${out.count()}")
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        println(f"SCALE${k}X[incdedup] simhash-wide: increment ${tShInc}%.2f s vs " +
-          f"full recompute ${tShFull}%.2f s (${tShFull / tShInc}%.1f x; index build " +
-          f"${tShBuild}%.2f s paid once per corpus version)")
-        // SPAN family leg (round 12, fifth family): full removal re-chunks
-        // the corpus; the increment chunks only the batch and probes the
-        // stored per-span aggregate
-        val tSpFull = time("full_span_removal") {
-          graft.operators.Dedup.removeDuplicateSpans(spark, dst)
-            .write.format("noop").mode("overwrite").save()
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val spIdx = s"$dst/spanindex"
-        val tSpBuild = time("span_index_build") {
-          graft.operators.Dedup.buildSpanIndex(spark, d.filter(!isBatch), spIdx)
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val tSpInc = time("span_increment") {
-          val out = graft.operators.Dedup.spanRemovalIncrement(spark,
-            d.filter(isBatch), spIdx, append = false)
-          println(s"SCALE${k}X[incdedup] span increment docs: ${out.count()}")
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        println(f"SCALE${k}X[incdedup] span family: increment ${tSpInc}%.2f s vs " +
-          f"full removal ${tSpFull}%.2f s (${tSpFull / tSpInc}%.1f x; index build " +
-          f"${tSpBuild}%.2f s paid once per corpus version)")
-
-      case "appendseq" =>
-        // Index maintenance under REPETITION (round-12 verdict task 3):
-        // §8.5.8 measured ONE batch against a prebuilt index; production
-        // is N appends/day. Ten sequential 250-doc appends onto an index
-        // of the varied corpus — per-append cost must stay ≈ flat while
-        // part files accumulate linearly, then compactIndex collapses the
-        // accumulation and the next probe must be unchanged (and no
-        // slower). Base = all replicas ≥ 1 plus half of replica 0, so
-        // every batch's near-dup partners live mostly in the index.
-        time("build")(buildDocs(varied = true))
-        val dd = Tables(spark, dst, "documents")
-        val idxDir = s"$dst/mhidx_seq"
-        // fresh index per run — a stale one would absorb the appends
-        locally {
-          val p = new org.apache.hadoop.fs.Path(idxDir)
-          val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsys.exists(p)) fsys.delete(p, true)
-        }
-        val inBase = col("doc_id") >= 1000000L || col("doc_id") % 20 < 10
-        time("index_build") {
-          graft.operators.Dedup.buildMinhashIndex(spark,
-            dd.filter(inBase), idxDir, s"$dst#sq-base")
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        val postingsPath = s"$idxDir/postings.parquet"
-        def files() = graft.operators.IndexMaintenance.partFileCount(spark, postingsPath)
-        println(s"SCALE${k}X[appendseq] base postings part files: ${files()}")
-        for (j <- 0 until 10) {
-          val batch = dd.filter(col("doc_id") < 1000000L && col("doc_id") % 20 === (10 + j))
-          time(f"append_$j%02d") {
-            graft.operators.Dedup.dedupIncrement(spark, batch, idxDir,
-              s"$dst#sq$j", append = true)
-              .write.format("noop").mode("overwrite").save()
-          }
-          println(s"SCALE${k}X[appendseq] after append $j: part files = ${files()}")
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-        // same probe before/after compaction: append=false keeps it pure;
-        // batch 9 is already indexed, so its pairs are stable across the
-        // compaction (id-equality excludes self-matches)
-        def probe(tag: String): Long = {
-          var n = 0L
-          time(tag) {
-            n = graft.operators.Dedup.dedupIncrement(spark,
-              dd.filter(col("doc_id") < 1000000L && col("doc_id") % 20 === 19),
-              idxDir, s"$dst#sq-probe-$tag", append = false).count()
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          n
-        }
-        val nPre = probe("probe_precompact")
-        val preFiles = files()
-        time("compact")(graft.operators.Dedup.compactIndex(spark, idxDir))
-        val nPost = probe("probe_postcompact")
-        println(s"SCALE${k}X[appendseq] compaction: $preFiles -> ${files()} part files; " +
-          s"probe pairs $nPre -> $nPost (must be equal: ${nPre == nPost})")
-
-      case "bpetrain" =>
-        // sequential-vs-batched trainer cost at R merges on sf0.1: the
-        // claim under measurement is the O(R²) → O(R²/B) re-segmentation
-        // cut — rounds (and driver round-trips) fall ~B×, wall-clock
-        // follows minus the per-pass fixed cost batching can't remove —
-        // and the merge SETS should agree except for the documented
-        // product-pair caveat (report the divergence, don't hide it).
-        // R defaults to 32 (the r8 datum); SPARK_GRAFT_BPE_R=512 is the
-        // production-shaped run (r9 verdict task 3), where the sequential
-        // leg is the expensive half — skip it with SPARK_GRAFT_BPE_SEQ=0
-        // only for batched-only curve exploration (the committed datum
-        // must include the sequential base).
-        val r = sys.env.getOrElse("SPARK_GRAFT_BPE_R", "32").toInt
-        val batches = sys.env.getOrElse("SPARK_GRAFT_BPE_B", "4,8,16")
-          .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-        val runSeq = sys.env.getOrElse("SPARK_GRAFT_BPE_SEQ", "1") == "1"
-        // The raw sf0.1 documents carry a 31-word vocabulary whose merge
-        // capacity is Σ(len−1) = 107 — both trainers exhaust (`done`)
-        // near R≈100, so the production-shaped R=512 run needs the
-        // vocabulary-VARIED replication (flagship's per-replica token
-        // suffixes): SPARK_GRAFT_BPE_VARIED=1 trains on K× suffixed
-        // replicas (vocab 31·K words), which is also the realistic BPE
-        // input shape — real corpora are vocab-rich, not 31 words.
-        // SPARK_GRAFT_BPE_RICH=1: a ≥50k-distinct-word corpus (r10 verdict
-        // #3) — the suffixed-replica corpus only multiplies the 31-word
-        // vocabulary by K, so per-round trainer cost stayed flat and the
-        // O(R²/B) re-segmentation claim went unexercised. Here 20k docs ×
-        // 50 tokens sample a 50 000-word synthetic vocabulary (ids spelled
-        // in letters, 3–5 chars — merge capacity Σ(len−1) ≈ 150k ≫ R=512),
-        // so the vocab-grain re-segmentation term is the dominant
-        // per-round cost and batching's round-count cut is measured where
-        // it matters. Deterministic per-doc PRNG; probe-only corpus.
-        val richSrc = if (sys.env.getOrElse("SPARK_GRAFT_BPE_RICH", "0") != "1") None else {
-          // v2: 200k distinct words × 8 chars (v1's 50k × 3–5-char words
-          // left per-round re-segmentation at ~0.06 s against the ~0.35 s
-          // fixed round cost — real but noise-buried; 8× the per-round
-          // symbol-scan work makes the O(R²) growth unmistakable)
-          val marker = new java.io.File(s"$dst/.built_rich_v2")
-          if (!new java.io.File(s"$dst/documents.parquet").exists || !marker.exists) {
-            time("build") {
-              import spark.implicits._
-              def spell(w: Int): String =
-                java.lang.Long.toString(w + 8031810176L, 26).map { c =>
-                  if (c.isDigit) ('a' + (c - '0')).toChar else ('k' + (c - 'a')).toChar
-                }
-              val docs = spark.range(40000).as[Long].map { id =>
-                val rnd = new scala.util.Random(id * 2654435761L + 12345L)
-                val text = Seq.fill(60)(spell(rnd.nextInt(200000))).mkString(" ")
-                (id, text)
-              }.toDF("doc_id", "text")
-                .withColumn("lang", lit("en")).withColumn("source", lit("bperich"))
-                .withColumn("n_chars", length(col("text")).cast("long"))
-              writeReplicated(docs, s"$dst/documents.parquet")
-            }
-            Option(marker.getParentFile).foreach(_.mkdirs())
-            // the rebuild overwrote documents.parquet, so EVERY mode's
-            // marker is now stale — a surviving .built_varied_* would let a
-            // later VARIED run skip its own rebuild and train on this corpus
-            clearBuiltMarkers(marker.getParentFile)
-            marker.createNewFile()
-          }
-          Some(dst)
-        }
-        val bpeSrc = if (richSrc.isDefined) richSrc.get
-        else if (sys.env.getOrElse("SPARK_GRAFT_BPE_VARIED", "0") == "1") {
-          // The cached corpus is keyed on its build parameters (varied, k,
-          // src mtime): a stale $dst from a prior mode/k — or from before a
-          // driver testdata regen — would silently train on the wrong
-          // corpus shape. The marker invalidates it.
-          val marker = new java.io.File(s"$dst/.built_varied_k$k" +
-            s"_src${new java.io.File(s"$src/documents.parquet").lastModified}")
-          if (!new java.io.File(s"$dst/documents.parquet").exists || !marker.exists) {
-            time("build")(buildDocs(varied = true))
-            Option(marker.getParentFile).foreach(_.mkdirs())
-            // clear rich AND varied markers: this rebuild invalidates both
-            clearBuiltMarkers(marker.getParentFile)
-            marker.createNewFile()
-          }
-          dst
-        } else src
-        var seqMerges: Seq[(Int, String, String, Long)] = Nil
-        val seqT = if (runSeq) time(s"bpe_seq_R$r") {
-          seqMerges = graft.operators.Bpe.learnMerges(spark, bpeSrc, r)
-        } else Double.NaN
-        if (runSeq)
-          println(s"SCALE${k}X[bpetrain] sequential merges=${seqMerges.length} (rounds=${seqMerges.length})")
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        for (b <- batches) {
-          var bat: Seq[(Int, String, String, Long)] = Nil
-          val batT = time(s"bpe_batched_R${r}_B$b") {
-            bat = graft.operators.Bpe.learnMergesBatched(spark, bpeSrc, r, batch = b)
-          }
-          if (runSeq) {
-            val s1 = seqMerges.map(m => (m._2, m._3)).toSet
-            val s2 = bat.map(m => (m._2, m._3)).toSet
-            println(f"SCALE${k}X[bpetrain] B=$b%d: speedup ${seqT / batT}%.2f x, " +
-              s"merge_set_overlap ${s1.intersect(s2).size}/$r " +
-              s"(seq-only ${(s1 -- s2).size}, batched-only ${(s2 -- s1).size})")
-          } else
-            println(s"SCALE${k}X[bpetrain] B=$b: merges=${bat.length} " +
-              "(no sequential base this run — speedup/overlap not comparable)")
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-
-      case "semdedup" =>
-        // SemDeDup's published cost model made a measured law: the only
-        // super-linear work is the per-cluster pairwise matrix, Σ sᵢ(sᵢ−1)/2,
-        // governed by the cluster count K. Two legs: (a) the K KNOB — same
-        // grown corpus, K 16 → 64 should cut candidate-pair mass ~4× and
-        // wall time with it; (b) LINEARITY — base corpus at K=8 vs the k×
-        // corpus at K=64 holds E[cluster size] ≈ constant, so a 10× corpus
-        // should cost ~10× (pair-mass ratio), not 100× (an n² ratio). The
-        // grown corpus is the interpolated-mixture geometry (real cluster
-        // structure for the quantizer to find, not perturbation clouds).
-        time("build")(buildEmbeddings(varied = true))
-        def probeSem(tag: String, dir: String, kc: Int): Unit = {
-          val e = Tables(spark, dir, "embeddings")
-            .select(col("vec_id"), col("embedding"))
-          val n = e.count()
-          var cents: Seq[Seq[Double]] = Seq.empty
-          time(s"${tag}_train_k$kc") {
-            cents = graft.operators.Similarity.learnCentroids(spark, e, kc)
-          }
-          var occ: Array[Long] = Array.empty
-          var kept = 0L
-          time(s"${tag}_semdedup_k$kc") {
-            val agg = graft.operators.Dedup.semanticDedupWith(spark, e, cents)
-              .groupBy(col("cid"))
-              .agg(count(lit(1)).as("members"), sum(col("keep")).as("kept"))
-              .collect()
-            occ = agg.map(_.getLong(1))
-            kept = agg.map(_.getLong(2)).sum
-          }
-          val mass = occ.map(c => c * (c - 1) / 2).sum
-          println(f"SCALE${k}X[semdedup] $tag n=$n K=$kc: " +
-            f"candidate pair mass $mass, max cell ${occ.max}, kept $kept/$n")
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-        probeSem("base", src, 8)    // E[cell] matched with grown@64 (leg b)
-        probeSem("grown", dst, 16)  // knob leg (a): vs grown@64
-        probeSem("grown", dst, 64)
-        // increment leg: a FIXED batch (the base corpus's vec_id%10==9
-        // slice, same rows at every k) merged into semantic indexes built
-        // over the base corpus vs the k× corpus — daily-ingest cost must
-        // track the batch and its touched cells, not the corpus (compare
-        // the two increment rows against their index_build rows)
-        val litCents = graft.functions.VectorOps.hyperplanes(8, 64, seed = 31L)
-        val batchSem = Tables(spark, dst, "embeddings")
-          .filter(col("vec_id") < 1000000L && col("vec_id") % 10 === 9)
-          .select(col("vec_id") + lit(100000000L) as "vec_id", col("embedding"))
-        for ((tag, dir) <- Seq(("base", src), ("grown", dst))) {
-          val corpus = Tables(spark, dir, "embeddings")
-            .select(col("vec_id"), col("embedding"))
-          val n = corpus.count()
-          val semIdx = {
-            val p = new org.apache.hadoop.fs.Path(s"$dst/semidx_$tag")
-            val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fsys.exists(p)) fsys.delete(p, true)
-            p.toString
-          }
-          time(s"${tag}_sem_index_build") {
-            graft.operators.Dedup.buildSemanticIndex(spark, corpus, semIdx, litCents)
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          time(s"${tag}_sem_increment_n$n") {
-            graft.operators.Dedup.semanticDedupIncrement(spark, batchSem, semIdx)
-              .write.format("noop").mode("overwrite").save()
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          // EMBEDDING (SRP-LSH) index family leg (round 12): same fixed
-          // batch against the base-corpus vs grown-corpus index — the
-          // fourth family's increment-vs-index-size law (full recompute
-          // re-bands the corpus ∝ n; the increment bands only the batch
-          // and probes stored postings)
-          val tEmbFull = time(s"${tag}_emb_full_pairs_n$n") {
-            graft.operators.Dedup.embeddingNearDupPairs(spark, dir)
-              .write.format("noop").mode("overwrite").save()
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          val embIdx = {
-            val p = new org.apache.hadoop.fs.Path(s"$dst/embidx_$tag")
-            val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fsys.exists(p)) fsys.delete(p, true)
-            p.toString
-          }
-          val tEmbBuild = time(s"${tag}_emb_index_build") {
-            graft.operators.Dedup.buildEmbeddingIndex(spark, corpus, embIdx)
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          val tEmbInc = time(s"${tag}_emb_increment_n$n") {
-            graft.operators.Dedup.embeddingDedupIncrement(spark, batchSem, embIdx)
-              .write.format("noop").mode("overwrite").save()
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-          println(f"SCALE${k}X[semdedup] $tag embedding family (n=$n): increment " +
-            f"${tEmbInc}%.2f s vs full recompute ${tEmbFull}%.2f s " +
-            f"(${tEmbFull / tEmbInc}%.1f x; index build ${tEmbBuild}%.2f s " +
-            "paid once per corpus version)")
-        }
-
-      case "mergegrain" =>
-        // The partitioned-state machinery priced at DEPLOYMENT-shaped
-        // grain (round-14 verdict task 4): the §8.5.9 family runs measure
-        // the machinery through whole operators at ~100 KB of state, where
-        // the per-partition rename swap dominates. Here the state is
-        // synthetic and big — k×100k rows (k=10 → 1M) at nParts=256 — so
-        // the numbers price what matters at scale: per-merge wall vs
-        // touched-partition count, the ∝-touched win over a full rewrite,
-        // and the repartitionState migration. Run with
-        // SPARK_GRAFT_MERGE_TELEMETRY=full to also price the full-table
-        // telemetry denominator the production merge no longer pays.
-        val nRows = k.toLong * 100000L
-        val nP = 256
-        val stPath = s"$dst/grain_state.parquet"
-        locally {
-          val p = new org.apache.hadoop.fs.Path(dst)
-          val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fsys.mkdirs(p)
-          fsys.delete(new org.apache.hadoop.fs.Path(stPath), true)
-          // also clear the table's SIBLING sidecars — a probe run that
-          // crashed mid-merge/mid-migration leaves a stale lease /
-          // .parts.next / staging dir that would wedge THIS run's fresh
-          // state behind "lease held" / "torn layout migration" refusals
-          Seq(".maintenance", ".parts", ".parts.next", ".olddir", ".rewrite")
-            .foreach(sfx => fsys.delete(new org.apache.hadoop.fs.Path(stPath + sfx), true))
-        }
-        // ~180-byte rows: thin enough to build fast, fat enough that the
-        // rewritten-bytes term (not the per-partition rename) is what the
-        // merge walls price — the deployment-shaped regime
-        val stateDf = spark.range(nRows)
-          .select(col("id").as("key"), (col("id") * 31L % 9973L).as("value"),
-            concat(lit("p" * 8), repeat(conv(col("id") * 2654435761L, 10, 16), 10))
-              .as("payload"))
-        time(s"state_build_${nRows}_p$nP") {
-          graft.operators.IndexFamily.writePartitioned(stateDf, stPath, "key", nP)
-        }
-        // two deployment batch shapes: SMALL (a daily cluster-increment's
-        // tens of touched labels) and MEDIUM (a span batch's hundreds of
-        // touched hashes); keys hash uniformly, so expected touched
-        // partitions are 256·(1−(1−1/256)^keys)
-        import spark.implicits._
-        for ((tag, nTouch, nNew, tagBase) <- Seq(("small", 16, 8, 0L),
-                                                 ("medium", 512, 256, 1000000L))) {
-          for (j <- 0 until 3) {
-            val touched = (0 until nTouch)
-              .map(i => (j * 100000L + i * 37L) % nRows).distinct.toDF("key")
-            // tagBase keeps the two tags' fresh-key ranges DISJOINT — the
-            // small tag's step-6 and the medium tag's step-7 offsets
-            // collide at multiples of 42, and a re-inserted "fresh" key
-            // is kept twice (mergeTouched only replaces TOUCHED keys),
-            // leaving duplicate keys in the final-state telemetry
-            val fresh = (0 until nNew)
-              .map(i => nRows + tagBase + j * 10000L + i * (tag.length + 1)).distinct
-              .map(kk => (kk, kk * 31L % 9973L)).toDF("key", "value")
-              .withColumn("payload", lit("fresh-" * 20))
-            val replace = touched.select(col("key"), (col("key") + 1L).as("value"),
-              lit("merged-" * 20).as("payload"))
-            var parts = 0
-            val sec = time(s"merge_${tag}_$j") {
-              parts = graft.operators.IndexFamily.mergeTouched(spark, stPath, "key",
-                touched, replace.unionByName(fresh))
-            }
-            println(f"SCALE${k}X[mergegrain] merge_${tag}_$j: $parts/$nP partitions, " +
-              f"${sec * 1000 / math.max(parts, 1)}%.0f ms/partition")
-            spark.catalog.clearCache(); Checkpoints.releaseAll()
-          }
-        }
-        // the cost the partitioning REPLACED: one full-table rewrite
-        time(s"full_rewrite_p$nP") {
-          graft.operators.IndexFamily.rewritePartitioned(spark, stPath, "key")(df => df)
-        }
-        spark.catalog.clearCache(); Checkpoints.releaseAll()
-        // layout migration at the same grain (round-14 verdict task 6)
-        time(s"repartition_${nP}_to_${nP * 2}") {
-          graft.operators.IndexFamily.repartitionState(spark, stPath, "key", nP * 2)
-        }
-        val got = spark.read.parquet(stPath)
-        println(s"SCALE${k}X[mergegrain] final: parts=" +
-          s"${graft.operators.IndexFamily.partsOf(spark, stPath)}, " +
-          s"rows=${got.count()} (expect ≥ $nRows), " +
-          s"valueSum=${got.agg(sum(col("value"))).head().getLong(0)}")
-
-      case "appendguard" =>
-        // The id-newness guard's cost law (round-14 verdict task 1's
-        // §8.5.8 row): requireNewIds walls at index size N and 10N for
-        // each evidence path. The watermark path must be O(1), the bloom
-        // path ∝ batch, and only the legacy no-sidecar scan may grow with
-        // the index — that scan is what the sidecars removed from every
-        // healthy appending batch.
-        import spark.implicits._
-        val IF = graft.operators.IndexFamily
-        val batchN = 10000
-        for (mult <- Seq(1L, 10L)) {
-          val n = k.toLong * 100000L * mult
-          val tPath = s"$dst/guard_${n}.parquet"
-          locally {
-            val p = new org.apache.hadoop.fs.Path(dst)
-            val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            fsys.mkdirs(p)
-            fsys.delete(new org.apache.hadoop.fs.Path(tPath), true)
-          }
-          // stored ids: the EVEN numbers below 2n (odd ids are fresh ids
-          // BELOW the watermark — the bloom path's workload)
-          spark.range(n).select((col("id") * 2L).as("doc_id"))
-            .repartition(32).write.parquet(tPath)
-          time(s"seed_guards_n$n")(IF.seedIdGuards(spark, tPath, "doc_id"))
-          val monotone = (0 until batchN).map(i => 2L * n + i).toDF("doc_id")
-          val belowWm = (0 until batchN).map(i => 2L * i + 1L).toDF("doc_id")
-          val overlap = (0 until batchN).map(i => 2L * i).toDF("doc_id")
-          for (rep <- 0 until 3) {
-            time(s"guard_watermark_n${n}_$rep") {
-              IF.requireNewIds(spark, tPath, "doc_id", monotone, batchN, "probe")
-            }
-            assert(IF.lastNewIdsPath == "watermark", IF.lastNewIdsPath)
-            time(s"guard_bloom_n${n}_$rep") {
-              IF.requireNewIds(spark, tPath, "doc_id", belowWm, batchN, "probe")
-            }
-            assert(IF.lastNewIdsPath.startsWith("bloom"), IF.lastNewIdsPath)
-            time(s"guard_overlap_n${n}_$rep") {
-              val ov = IF.requireNewIds(spark, tPath, "doc_id", overlap, batchN,
-                "probe", strict = false)
-              assert(ov == batchN.toLong, s"expected $batchN overlaps, got $ov")
-            }
-          }
-          // round-16 (r15 verdict task 5): per-append SIDECAR I/O at
-          // micro-batch grain — the deferred-bloom arm (pending sidecar,
-          // the new default path) vs the pre-r16 per-batch bloom rewrite.
-          // Below-watermark fresh batches so the bloom machinery engages.
-          locally {
-            import spark.implicits._
-            def freshBatch(rep: Int, base: Long) =
-              (0 until batchN).map(i => (base + rep * 2L * batchN + 2L * i + 1L, 0L))
-                .toDF("doc_id", "v")
-            val bloomFile = new java.io.File(s"$tPath.idbloom")
-            for (rep <- 0 until 3) {
-              val mtime0 = bloomFile.lastModified()
-              time(s"guarded_append_deferred_n${n}_$rep") {
-                IF.appendWithIdGuards(freshBatch(rep, 4L * n), tPath, "doc_id",
-                  batchN.toLong, 1, "probe")
-              }
-              val rewrote = bloomFile.lastModified() != mtime0
-              println(s"SCALE${k}X[appendguard] deferred_n${n}_$rep " +
-                s"bloom_rewritten=$rewrote pending=${IF.readPendingIds(spark, tPath).length}")
-            }
-            // the pre-r16 shape: bloom merged on every batch
-            for (rep <- 0 until 3) {
-              val b = freshBatch(rep, 6L * n)
-              time(s"guarded_append_eagerbloom_n${n}_$rep") {
-                IF.appendWithIdGuards(b, tPath, "doc_id", batchN.toLong, 1, "probe")
-                IF.withLease(spark, tPath) {
-                  IF.advanceIdBloom(spark, tPath, b.select(col("doc_id")), "doc_id")
-                }
-              }
-            }
-          }
-          // the pre-round-14 cost: no sidecars, full keyed scan per batch
-          IF.resetIdWatermark(spark, tPath)
-          IF.dropIdBloom(spark, tPath)
-          for (rep <- 0 until 3) {
-            time(s"guard_legacy_scan_n${n}_$rep") {
-              IF.requireNewIds(spark, tPath, "doc_id", monotone, batchN, "probe")
-            }
-            assert(IF.lastNewIdsPath == "scan", IF.lastNewIdsPath)
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-
-      case "embingest" =>
-        // §8.5.17 (round-15 verdict task 2): the embedding-vector ingest
-        // tier — at 235 vecs/s the slowest stream tier by 5-20× — priced
-        // per stage at the StreamBench workload's own grain (20k-vector
-        // index, 10k-vector micro-batches, 16 bands × 12 bits). Stages:
-        // (A) SRP re-bucketing of the batch (map-only banding);
-        // (B) candidate generation against the stored postings (A + the
-        //     banded join — the stored-postings scan lives here);
-        // (C) + exact-cosine verify on stored vectors (the full probe,
-        //     append=false — C−B is the verify join, which scans the
-        //     WHOLE vectors table per batch: the ∝-index term);
-        // (D) the full survivors call with the index append.
-        import spark.implicits._
-        val D = graft.operators.Dedup
-        def synthVec(id: Long): Array[Float] = {
-          var x = id * 6364136223846793005L + 1442695040888963407L
-          Array.tabulate(64) { _ =>
-            x = x * 6364136223846793005L + 1442695040888963407L
-            ((x >>> 40).toInt % 2048) / 1024.0f - 1.0f
-          }
-        }
-        val (nBands, bandBits) = (16, 12)
-        val idx = s"$dst/embidx"
-        locally {
-          val p = new org.apache.hadoop.fs.Path(dst)
-          val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fsys.delete(new org.apache.hadoop.fs.Path(idx), true); fsys.mkdirs(p)
-        }
-        val idxVecs = (0 until 20000).map(i => (i.toLong, synthVec(i.toLong)))
-          .toDF("vec_id", "embedding")
-        time("build_embedding_index")(
-          D.buildEmbeddingIndex(spark, idxVecs, idx, nBands = nBands,
-            bandBits = bandBits))
-        for (b <- 0 until 3) {
-          val batch = (0 until 10000).map { i =>
-            val k = b * 10000 + i
-            val v = if (k % 10 == 0) synthVec((k % 20000).toLong)
-                    else synthVec(1000000L + k)
-            (100000L + k, v)
-          }.toDF("vec_id", "embedding")
-          val newE = graft.Checkpoints.local(batch.select(
-            col("vec_id").as("doc_id"), col("embedding"),
-            graft.functions.VectorOps.l2Norm(col("embedding")).as("norm")))
-          newE.count()
-          time(s"stageA_band_b$b") {
-            D.embeddingBandedOf(newE, nBands, bandBits, 64)
-              .agg(count(lit(1))).head()
-          }
-          time(s"stageB_cands_b$b") {
-            val oldBanded = graft.operators.IndexFamily
-              .readSnapshot(spark, s"$idx/postings.parquet")
-              .select(col("doc_id"), col("band"), col("bkey"))
-            val n = D.incrementCandidates(oldBanded,
-              D.embeddingBandedOf(newE, nBands, bandBits, 64)
-                .withColumn("is_new", lit(true)),
-              10000L * nBands, Int.MaxValue, "embingest").count()
-            println(s"SCALE${k}X[embingest] cands_b$b n=$n")
-          }
-          // sub-stages of B, inlined from incrementCandidates' body
-          locally {
-            val newBanded = D.embeddingBandedOf(newE, nBands, bandBits, 64)
-              .withColumn("is_new", lit(true))
-            time(s"stageB1_probekeys_b$b") {
-              newBanded.select(col("band"), col("bkey")).distinct().count()
-            }
-            val oldBanded = graft.operators.IndexFamily
-              .readSnapshot(spark, s"$idx/postings.parquet")
-              .select(col("doc_id"), col("band"), col("bkey"))
-            val probeKeys = newBanded.select(col("band"), col("bkey")).distinct()
-            val touched = oldBanded
-              .join(broadcast(probeKeys), Seq("band", "bkey"), "left_semi")
-              .withColumn("is_new", lit(false))
-            time(s"stageB2_touched_b$b")(touched.count())
-            val all = time2(s"stageB3_ckpt_b$b") {
-              graft.Checkpoints.local(touched.unionByName(newBanded))
-            }
-            time(s"stageB4_selfjoin_b$b") {
-              all.filter(col("is_new")).as("x")
-                .join(all.as("y"),
-                  col("x.band") === col("y.band") &&
-                    col("x.bkey") === col("y.bkey") &&
-                    col("x.doc_id") =!= col("y.doc_id"))
-                .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-                  greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
-                .distinct().count()
-            }
-            graft.Checkpoints.release(all)
-          }
-          time(s"stageC_probe_b$b") {
-            D.embeddingDedupIncrement(spark, batch, idx,
-              nBands = nBands, bandBits = bandBits, append = false).count()
-          }
-          time(s"stageD_full_b$b") {
-            D.embeddingIncrementSurvivors(spark, batch, idx,
-              nBands = nBands, bandBits = bandBits, append = true).count()
-          }
-          graft.Checkpoints.release(newE)
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-
-      case "embflat" =>
-        // §8.5.17 addendum (round-16 verdict tasks 1+6): per-batch probe
-        // wall vs STORED INDEX SIZE after the partitioned vector tables —
-        // the claim is the verify leg (64 floats + join per stored row,
-        // the term §8.5.17 named) is now ∝ candidate ids, never ∝ index,
-        // while the postings semi-join scan remains a column-pruned
-        // 24-byte/row pass whose constant the table prices. Arms per
-        // size: the PARTITIONED layout (hasParts) and a LEGACY flat twin
-        // of the same content driven through the same public increment
-        // (the pre-r17 full-scan reads), stream grain (500-vector
-        // batches, 10% stored near-dups).
-        import spark.implicits._
-        val D = graft.operators.Dedup
-        val IF = graft.operators.IndexFamily
-        def synthVec(id: Long): Array[Float] = {
-          var x = id * 6364136223846793005L + 1442695040888963407L
-          Array.tabulate(64) { _ =>
-            x = x * 6364136223846793005L + 1442695040888963407L
-            ((x >>> 40).toInt % 2048) / 1024.0f - 1.0f
-          }
-        }
-        val nBands = 16
-        val batchN = 500
-        // bandBits SCALED to the corpus like a deployment sizes them
-        // (target ≤ ~1 stored vector per bucket — at a fixed 12 bits the
-        // 700k corpus held ~171/bucket and CANDIDATE volume itself grew ∝
-        // index, drowning the read-path law this probe prices)
-        // the 24-bit leg at 2M is the SPARSE-candidate regime: chance
-        // collisions drop to ~0.1/batch-vector, so candidate ids ≪
-        // partitions and the doc_id pruning actually bites — the regime a
-        // dup-heavy production ingest (exact copies survive ANY bits)
-        // lives in; the lower-bits rows are the chance-candidate-
-        // SATURATED regime, where candidate mass itself is ∝ n·2^-bits
-        // (the LSH radius/recall tradeoff, priced in the addendum)
-        for ((nIdx, bandBits) <- Seq((70000L, 17), (200000L, 18),
-                                     (700000L, 20), (2000000L, 21),
-                                     (2000000L, 24))) {
-          val tag = s"${nIdx}_b$bandBits"
-          val idx = s"$dst/embidx_$tag"
-          val flat = s"$dst/embflat_$tag"
-          locally {
-            val p = new org.apache.hadoop.fs.Path(dst)
-            val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            fsys.delete(new org.apache.hadoop.fs.Path(idx), true)
-            fsys.delete(new org.apache.hadoop.fs.Path(flat), true)
-            fsys.mkdirs(p)
-          }
-          val idxVecs = spark.range(nIdx).select(col("id").as("vec_id"))
-            .as[Long].map(i => (i, synthVec(i))).toDF("vec_id", "embedding")
-          time(s"build_n$tag")(
-            D.buildEmbeddingIndex(spark, idxVecs, idx, nBands, bandBits, 64))
-          // legacy flat twin: same content, pre-r17 layout (no .parts) —
-          // the increment's hasParts branch serves it with full scans
-          IF.readSnapshot(spark, s"$idx/vectors.parquet")
-            .write.parquet(s"$flat/vectors.parquet")
-          IF.readSnapshot(spark, s"$idx/postings.parquet")
-            .select(col("doc_id"), col("band"), col("bkey"))
-            .write.parquet(s"$flat/postings.parquet")
-          spark.read.parquet(s"$idx/meta.parquet")
-            .write.parquet(s"$flat/meta.parquet")
-          IF.seedIdGuards(spark, s"$flat/vectors.parquet", "doc_id")
-          var next = 10L * nIdx
-          def batch(): DataFrame = {
-            val rows = (0 until batchN).map { i =>
-              val id = next + i
-              val v = if (i % 10 == 0) synthVec((id * 7919L) % nIdx)
-                      else synthVec(5L * nIdx + id)
-              (id, v)
-            }
-            next += batchN
-            rows.toDF("vec_id", "embedding")
-          }
-          val totalVecBytes = {
-            val fsys = new org.apache.hadoop.fs.Path(idx)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            graft.operators.IndexFamily
-              .snapshotFiles(spark, s"$idx/vectors.parquet")
-              .map(f => fsys.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)
-              .sum
-          }
-          for (rep <- 0 until 3) {
-            val b = batch()
-            time(s"probe_part_n${tag}_$rep") {
-              D.embeddingDedupIncrement(spark, b, idx,
-                nBands = nBands, bandBits = bandBits, append = false).count()
-            }
-            println(s"SCALE${k}X[embflat] verify_read_n${tag}_$rep: " +
-              s"parts=${D.lastVerifyReadParts._1}/${D.lastVerifyReadParts._2} " +
-              s"bytes=${D.lastVerifyReadBytes} of $totalVecBytes " +
-              f"(${100.0 * D.lastVerifyReadBytes / math.max(1L, totalVecBytes)}%.1f%%)")
-            time(s"probe_flat_n${tag}_$rep") {
-              D.embeddingDedupIncrement(spark, b, flat,
-                nBands = nBands, bandBits = bandBits, append = false).count()
-            }
-            spark.catalog.clearCache(); Checkpoints.releaseAll()
-          }
-          // appended arm: delta accumulation + the in-line fold trigger
-          for (rep <- 0 until 3) {
-            val b = batch()
-            time(s"append_part_n${tag}_$rep") {
-              D.embeddingDedupIncrement(spark, b, idx,
-                nBands = nBands, bandBits = bandBits, append = true).count()
-            }
-            spark.catalog.clearCache(); Checkpoints.releaseAll()
-          }
-        }
-        // SEMANTIC leg (task 6's second half): K TRACKS the corpus
-        // (~512 vectors per cell — §8.5.11's sizing discipline; SemDeDup
-        // itself ran K=50k over 5B). Then BOTH per-batch terms are
-        // index-free: pair mass = batch × n/K and the cid-partitioned
-        // touched-cells read ≤ batch cells × n/K rows. At a FIXED small K
-        // the pair mass alone is ∝ index — no layout can fix a mis-sized
-        // model, which is exactly why the build sizes its own depth.
-        for (nIdx <- Seq(70000L, 700000L)) {
-          val idx = s"$dst/semidx_$nIdx"
-          locally {
-            val p = new org.apache.hadoop.fs.Path(idx)
-            val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            fsys.delete(p, true)
-          }
-          val kCells = math.max(64, (nIdx / 512L).toInt)
-          val cents = graft.functions.VectorOps.hyperplanes(kCells, 64, seed = 61L)
-          val idxVecs = spark.range(nIdx).select(col("id").as("vec_id"))
-            .as[Long].map(i => (i, synthVec(i))).toDF("vec_id", "embedding")
-          time(s"sem_build_n${nIdx}_k$kCells")(
-            D.buildSemanticIndex(spark, idxVecs, idx, cents))
-          var next = 10L * nIdx
-          for (rep <- 0 until 3) {
-            val rows = (0 until batchN).map { i =>
-              val id = next + i
-              (id, synthVec(5L * nIdx + id))
-            }
-            next += batchN
-            val b = rows.toDF("vec_id", "embedding")
-            time(s"sem_probe_n${nIdx}_$rep") {
-              D.semanticDedupIncrement(spark, b, idx, append = false).count()
-            }
-            println(s"SCALE${k}X[embflat] sem_read_n${nIdx}_$rep: " +
-              s"parts=${D.lastSemReadParts._1}/${D.lastSemReadParts._2} " +
-              s"bytes=${D.lastSemReadBytes}")
-            spark.catalog.clearCache(); Checkpoints.releaseAll()
-          }
-        }
-
-      case "keeperprobe" =>
-        // §8.5.16 (round-15 verdict task 1): the stream exact-state
-        // keeper probe's cost law after the partitioned-layout + bloom-
-        // ladder rework. Claims: per-batch appendExactState wall is FLAT
-        // in stored keeper count (1M vs 10M) because the bloom rules
-        // fresh hashes out driver-side and only the maybes (≈ true dups)
-        // read their _p partitions; the sidecar-less arm degrades to
-        // reading ∝ batch partitions (still pruned); the pre-r16 shape
-        // (full keeper scan per batch) is priced as the comparison.
-        import spark.implicits._
-        val IF = graft.operators.IndexFamily
-        val D = graft.operators.Dedup
-        val batchN = 500 // stream grain
-        for (mult <- Seq(1L, 10L)) {
-          val n = k.toLong * 100000L * mult
-          val idxDir = s"$dst/keeper_$n"
-          locally {
-            val p = new org.apache.hadoop.fs.Path(idxDir)
-            val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            fsys.delete(p, true); fsys.mkdirs(p)
-          }
-          // n distinct stored groups, ids [0, n)
-          val corpus = spark.range(n).select(col("id").as("doc_id"),
-            concat(lit("stored body number "), col("id")).as("text"))
-          time(s"build_exact_state_n$n")(D.buildExactState(spark, corpus, idxDir))
-          var nextId = 2L * n
-          def batch(tag: String, rep: Int,
-                    dupFrac: Double): org.apache.spark.sql.DataFrame = {
-            val rows = (0 until batchN).map { i =>
-              val id = nextId + i
-              // fresh texts are unique per ARM (tag) and rep — an earlier
-              // arm's fresh hashes are stored keepers by now
-              val text =
-                if (i < (batchN * dupFrac).toInt) s"stored body number ${(id * 7919L) % n}"
-                else s"fresh body ${tag}_r${rep}_n${n}_$i"
-              (id, text)
-            }
-            nextId += batchN
-            rows.toDF("doc_id", "text")
-          }
-          def run(tag: String, dupFrac: Double): Unit =
-            for (rep <- 0 until 3) {
-              val b = batch(tag, rep, dupFrac)
-              val hashed = b.select(col("doc_id"), md5(col("text")).as("text_hash"))
-              val gm = hashed.groupBy(col("text_hash"))
-                .agg(min(col("doc_id")).as("batch_min"))
-              time(s"${tag}_n${n}_$rep") {
-                D.appendExactState(spark, hashed, gm, idxDir).count()
-              }
-              println(s"SCALE${k}X[keeperprobe] ${tag}_n${n}_$rep path=" +
-                s"${D.lastKeeperProbePath} parts=${D.lastKeeperProbeParts}/${D.KeeperParts}")
-            }
-          run("probe_fresh", 0.0)   // all-new hashes: bloom rules out ~all
-          run("probe_dup10", 0.1)   // 10% dups: maybes ≈ 50 partitions
-          // fold the accumulated delta, then probe the folded table
-          time(s"fold_delta_n$n")(D.foldKeeperDelta(spark, idxDir))
-          run("probe_folded", 0.1)
-          // sidecar-less degradation: pruned ∝ batch partitions
-          IF.dropIdBloom(spark, s"$idxDir/exact_keepers.parquet")
-          run("probe_nobloom", 0.1)
-          // pre-r16 comparison: the full-keeper-table probe join per batch
-          val keepersPath = s"$idxDir/exact_keepers.parquet"
-          for (rep <- 0 until 3) {
-            val b = batch("fullscan", rep, 0.1)
-            val hashed = b.select(col("doc_id"), md5(col("text")).as("text_hash"))
-            time(s"probe_fullscan_n${n}_$rep") {
-              IF.readSnapshot(spark, keepersPath)
-                .select(col("text_hash"), col("keep_id").as("stored_keeper"))
-                .join(hashed, Seq("text_hash"), "right")
-                .count()
-            }
-          }
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-
-      case "selection" =>
-        // The frozen-model scoring cost law (round-14 Selection family).
-        // Claims under measurement, at model-corpus sizes N and 10N:
-        //  (a) frozen-model batch scoring is FLAT in N — the model is a
-        //      2048-slot literal plus LM tables bounded by the (fixed)
-        //      vocabulary, so corpus growth cannot reach the scoring plan;
-        //  (b) the un-frozen alternative (re-estimating the model per
-        //      batch, which is what a scorer without buildSelectionModel
-        //      pays) GROWS with N — the delta is what the persisted model
-        //      amortizes away from every arriving batch;
-        //  (c) build cost itself grows ~N but is paid once per model
-        //      version, not per batch.
-        import spark.implicits._
-        val Sel = graft.operators.Selection
-        // deterministic synthetic corpus: ~80-token docs over a 5 000-word
-        // vocabulary (the StreamBench LCG recipe), 1-in-4 docs in the
-        // target language so both bag models are populated
-        def mkDocs(n: Long, idOffset: Long): DataFrame =
-          spark.range(n).as[Long].map { i =>
-            val id = i + idOffset
-            val lang = if (id % 4 == 0) "en" else "xx"
-            val text = (0 until 80).map(j => s"w${(id * 80 + j) % 5000}").mkString(" ")
-            (id, lang, text)
-          }.toDF("doc_id", "lang", "text")
-        val batchN = 10000L
-        for (mult <- Seq(1L, 10L)) {
-          val n = k.toLong * 10000L * mult
-          val md = s"$dst/selmodel_$n"
-          time(s"build_model_n$n")(
-            Sel.buildSelectionModel(spark, mkDocs(n, 0L), md))
-          val batch = mkDocs(batchN, 10L * n + 1L).select(col("doc_id"), col("text"))
-          for (rep <- 0 until 3) {
-            time(s"score_frozen_b${batchN}_n${n}_$rep") {
-              Sel.scoreWithStoredModel(spark, batch, md)
-                .write.format("noop").mode("overwrite").save()
-            }
-            // the un-amortized arm: model re-estimated from the reference
-            // corpus on every batch (dsirModelOf + the LM aggregations ride
-            // inside buildSelectionModel; writing to a throwaway dir keeps
-            // the two arms' code paths identical)
-            time(s"score_reestimate_b${batchN}_n${n}_$rep") {
-              val tmp = s"$dst/selmodel_tmp_${n}_$rep"
-              Sel.buildSelectionModel(spark, mkDocs(n, 0L), tmp)
-              Sel.scoreWithStoredModel(spark, batch, tmp)
-                .write.format("noop").mode("overwrite").save()
-            }
-            spark.catalog.clearCache(); Checkpoints.releaseAll()
-          }
-        }
-        // §8.5.14 addendum (round-15, r14 verdict task 4): Brants' count
-        // cutoff vs model size. The flat-vocabulary corpus above repeats
-        // every bigram (nothing to prune); the pricing needs the
-        // HEAVY-TAILED shape real corpora have — ~20% head tokens, the
-        // rest a ~2M-id tail, so bigram singletons dominate and the raw
-        // table is corpus-shaped. The cutoff bounds it to the repeated
-        // (vocabulary-shaped) mass.
-        locally {
-          def mkTailDocs(n: Long, idOffset: Long): DataFrame =
-            spark.range(n).as[Long].map { i =>
-              val id = i + idOffset
-              // headness in BLOCKS of 4 positions (per-position hashing
-              // would never put two head tokens adjacent — consecutive
-              // positions can't both be ≡0 mod 3 — and no bigram would
-              // ever repeat): head-head bigrams repeat ~50× on average,
-              // every tail bigram is a near-singleton
-              val toks = (0 until 80).map { j =>
-                val h = (id * 80 + j) * 2654435761L
-                if ((id + j / 4) % 3 == 0) s"h${(h / 3) % 200}"
-                else s"t${h & 0x1FFFFF}"
-              }
-              (id, "en", toks.mkString(" "))
-            }.toDF("doc_id", "lang", "text")
-          val tailN = k.toLong * 10000L
-          val batch = mkTailDocs(1000L, 10L * tailN)
-            .select(col("doc_id"), col("text"))
-          for (mc <- Seq(1L, 2L, 4L)) {
-            val md = s"$dst/selmodel_mc$mc"
-            time(s"build_model_mincount${mc}_n$tailN")(
-              Sel.buildSelectionModel(spark, mkTailDocs(tailN, 0L), md,
-                minCount = mc))
-            val rows = spark.read.parquet(s"$md/lm_bigram.parquet").count()
-            time(s"score_frozen_mincount${mc}") {
-              Sel.scoreWithStoredModel(spark, batch, md)
-                .write.format("noop").mode("overwrite").save()
-            }
-            println(s"SCALE${k}X[selection] minCount=$mc: bigram table $rows rows")
-            spark.catalog.clearCache(); Checkpoints.releaseAll()
-          }
-        }
-
-      case "assigncost" =>
-        // §8.5.11 addendum (round-15 verdict task 1): the ASSIGNMENT term
-        // itself, at fixed n and growing K. The dense argmax evaluates all
-        // K centroids per row (∝ n·K·dim — §8.5.11's admitted scale term);
-        // the two-level path (CentroidAssign) evaluates C + nProbe·K/C ≈
-        // (1+nProbe)·√K per row. Claims: dense wall grows ~∝ K, two-level
-        // stays sub-linear, and the two paths agree except on the
-        // (reported) uncovered tail — the IVF covering condition.
-        time("build")(buildEmbeddings(varied = true))
-        val eAll = Tables(spark, dst, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        val n = eAll.count()
-        import graft.functions.{CentroidAssign, VectorOps}
-        for (kc <- Seq(64, 256, 1024)) {
-          val g = math.ceil(math.sqrt(kc.toDouble)).toInt
-          // the k-means-model geometry: g base directions, each carrying
-          // kc/g jittered members (i.i.d. Gaussian centroids would be the
-          // no-structure worst case — see SemanticDedupSpec)
-          val bases = VectorOps.hyperplanes(g, 64, seed = 51L)
-          val jit = VectorOps.hyperplanes(kc, 64, seed = 52L)
-          val cents = (0 until kc).map { i =>
-            val b = bases(i % g); val jv = jit(i)
-            b.indices.map(d => b(d) + 0.2 * jv(d))
-          }
-          def bc(df: org.apache.spark.sql.DataFrame, tag: String,
-                 cutoff: Int, nProbe: Int) =
-            CentroidAssign.withBestCentroid(df, "embedding", cents,
-              cidName = s"cid_$tag", simName = s"sim_$tag", nProbe, cutoff)
-          def run(tag: String, cutoff: Int, nProbe: Int): Double =
-            time(s"assign_${tag}_k$kc") {
-              bc(eAll, tag, cutoff, nProbe)
-                .agg(sum(col(s"cid_$tag"))).head()
-            }
-          val tDense = run("dense", Int.MaxValue, 1)
-          val tTwo = run("twolevel", 0, 2)
-          val mismatch = bc(bc(eAll, "d", Int.MaxValue, 1), "t", 0, 2)
-            .where(col("cid_d") =!= col("cid_t")).count()
-          println(f"SCALE${k}X[assigncost] n=$n K=$kc: dense $tDense%.2f s, " +
-            f"two-level $tTwo%.2f s (${tDense / tTwo}%.1fx), " +
-            f"mismatch $mismatch/$n (${100.0 * mismatch / n}%.1f%%)")
-          // round-16 (verdict task 4): the covering-sized probe depth —
-          // what nProbe the 95% sizing rule picks on this geometry, its
-          // realized mismatch, and the cost delta vs nProbe=2
-          val tSize = time(s"assign_covsize_k$kc") {
-            CentroidAssign.nProbeForCoveringOf(eAll, "embedding", cents, 0.95)
-          }
-          val auto = CentroidAssign.nProbeForCoveringOf(eAll, "embedding", cents, 0.95)
-          val tAuto = run(s"autoprobe$auto", 0, auto)
-          val autoMismatch = bc(bc(eAll, "d2", Int.MaxValue, 1), "t2", 0, auto)
-            .where(col("cid_d2") =!= col("cid_t2")).count()
-          println(f"SCALE${k}X[assigncost] n=$n K=$kc covering95: auto nProbe=$auto " +
-            f"(sizing pass $tSize%.2f s), wall $tAuto%.2f s " +
-            f"(${tAuto / tTwo}%.2fx of nProbe=2, ${tDense / tAuto}%.1fx vs dense), " +
-            f"mismatch $autoMismatch/$n (${100.0 * autoMismatch / n}%.1f%%)")
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-
-      case "ingest50" =>
-        // §8.5.15 (round-14 verdict task 8): the scoped-checkpoint hygiene
-        // law priced at deployment length — 50 micro-batches through the
-        // COMPOSED fullIngest and the stateless select_ingest. Claims:
-        // per-batch wall is FLAT (no accumulating state/storage term — the
-        // only admissible growth is the near-dup index's own ∝-touched
-        // probe), and the persistent-RDD count returns to its floor after
-        // every batch (the round-14 Checkpoints.scoped fix, previously
-        // spec-pinned at 20 batches).
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import spark.implicits._
-        val fixtureDir = "fixtures/stream"
-        require(new java.io.File(s"$fixtureDir/documents.parquet").exists,
-          "ingest50 needs the committed fixtures/stream corpus")
-        val nBatches = 50; val perBatch = 400
-        var dseed = 42L
-        val texts = new Array[String](nBatches * perBatch)
-        (0 until nBatches * perBatch).foreach { i =>
-          dseed = (dseed * 6364136223846793005L + 1442695040888963407L) & Long.MaxValue
-          texts(i) =
-            if (i > 0 && dseed % 10 == 0) texts(i - 1)
-            else (0 until 80).map(j => s"w${(i.toLong * 80 + j) % 5000}").mkString(" ")
-        }
-        def batchRows(b: Int): Seq[(Long, String, java.sql.Timestamp)] =
-          (0 until perBatch).map { i =>
-            val kk = b * perBatch + i
-            (20000000L + kk, texts(kk),
-              new java.sql.Timestamp((1704067200L + kk) * 1000L))
-          }
-        def mean(xs: Seq[Double]) = xs.sum / xs.size
-        def report(tag: String, walls: Array[Double], rdds: Array[Int]): Unit = {
-          println(f"SCALE${k}X[ingest50] $tag per-batch wall: " +
-            f"b1-5 ${mean(walls.slice(0, 5))}%.2f s, " +
-            f"b23-27 ${mean(walls.slice(22, 27))}%.2f s, " +
-            f"b46-50 ${mean(walls.slice(45, 50))}%.2f s " +
-            f"(tail/head ${mean(walls.slice(45, 50)) / mean(walls.slice(0, 5))}%.2fx); " +
-            s"persistent RDDs first/last ${rdds.head}/${rdds.last} (max ${rdds.max})")
-          println(s"SCALE${k}X[ingest50] $tag walls: " +
-            walls.map(w => f"$w%.2f").mkString(","))
-        }
-        locally {
-          val mhIdx = java.nio.file.Files.createTempDirectory("ing50-mh-").toString
-          val spIdx = java.nio.file.Files.createTempDirectory("ing50-sp-").toString
-          graft.operators.Dedup.buildMinhashIndex(spark,
-            Tables(spark, fixtureDir, "documents"), mhIdx, s"$mhIdx#base")
-          graft.operators.Dedup.buildSpanIndex(spark,
-            Tables(spark, fixtureDir, "documents").select(col("doc_id"), col("text")),
-            spIdx)
-          val corpusFps = graft.operators.TextAnalysis
-            .fingerprint(spark, fixtureDir).select(col("fp_md5"))
-          val in = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
-          val q = graft.streaming.DocPipeline.fullIngest(
-              in.toDF().toDF("doc_id", "text", "event_time"), corpusFps,
-              mhIdx, spIdx, s"$mhIdx#ing50", append = true) { out =>
-            out.write.format("noop").mode("overwrite").save()
-          }.start()
-          val walls = new Array[Double](nBatches)
-          val rdds = new Array[Int](nBatches)
-          try {
-            for (b <- 0 until nBatches) {
-              val t0 = System.nanoTime()
-              in.addData(batchRows(b)); q.processAllAvailable()
-              walls(b) = (System.nanoTime() - t0) / 1e9
-              rdds(b) = spark.sparkContext.getPersistentRDDs.size
-            }
-          } finally q.stop()
-          report("fullIngest", walls, rdds)
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-        // round-16: the same 50 batches through the PERSISTED-exact-state
-        // leg (the reworked keeper ladder — partitioned base + bloom +
-        // flat delta, one file per batch). Claims: per-batch wall FLAT
-        // (the probe is bloom+pruned+delta, never ∝ keepers) and storage
-        // at its floor per batch.
-        locally {
-          val mhIdx = java.nio.file.Files.createTempDirectory("ing50x-mh-").toString
-          val spIdx = java.nio.file.Files.createTempDirectory("ing50x-sp-").toString
-          graft.operators.Dedup.buildMinhashIndex(spark,
-            Tables(spark, fixtureDir, "documents"), mhIdx, s"$mhIdx#base")
-          graft.operators.Dedup.buildExactState(spark,
-            Tables(spark, fixtureDir, "documents").select(col("doc_id"), col("text")),
-            mhIdx)
-          graft.operators.Dedup.buildSpanIndex(spark,
-            Tables(spark, fixtureDir, "documents").select(col("doc_id"), col("text")),
-            spIdx)
-          val corpusFps = graft.operators.TextAnalysis
-            .fingerprint(spark, fixtureDir).select(col("fp_md5"))
-          val in = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
-          val q = graft.streaming.DocPipeline.fullIngest(
-              in.toDF().toDF("doc_id", "text", "event_time"), corpusFps,
-              mhIdx, spIdx, s"$mhIdx#ing50x", append = true,
-              maintainExactState = true) { out =>
-            out.write.format("noop").mode("overwrite").save()
-          }.start()
-          val walls = new Array[Double](nBatches)
-          val rdds = new Array[Int](nBatches)
-          try {
-            for (b <- 0 until nBatches) {
-              val t0 = System.nanoTime()
-              in.addData(batchRows(b)); q.processAllAvailable()
-              walls(b) = (System.nanoTime() - t0) / 1e9
-              rdds(b) = spark.sparkContext.getPersistentRDDs.size
-            }
-          } finally q.stop()
-          report("fullIngestExactState", walls, rdds)
-          println(s"SCALE${k}X[ingest50] fullIngestExactState keeper delta files: " +
-            graft.operators.IndexFamily.flatDeltaFiles(spark,
-              s"$mhIdx/exact_keepers.parquet").size)
-          spark.catalog.clearCache(); Checkpoints.releaseAll()
-        }
-        locally {
-          val md = java.nio.file.Files.createTempDirectory("ing50-sel-").toString
-          graft.operators.Selection.buildSelectionModel(spark,
-            Tables(spark, fixtureDir, "documents"), md)
-          val in = MemoryStream[(Long, String)](spark)
-          val q = graft.streaming.StreamSelect.scoredIngest(
-              in.toDF().toDF("doc_id", "text"), md) { out =>
-            out.write.format("noop").mode("overwrite").save()
-          }.start()
-          val walls = new Array[Double](nBatches)
-          val rdds = new Array[Int](nBatches)
-          try {
-            for (b <- 0 until nBatches) {
-              val t0 = System.nanoTime()
-              in.addData(batchRows(b).map(r => (r._1, r._2)))
-              q.processAllAvailable()
-              walls(b) = (System.nanoTime() - t0) / 1e9
-              rdds(b) = spark.sparkContext.getPersistentRDDs.size
-            }
-          } finally q.stop()
-          report("select_ingest", walls, rdds)
-        }
-
-      case other => sys.error(s"unknown SPARK_GRAFT_SCALE_MODE: $other")
-    }
+    val dst = s"/tmp/sf${k}x"
+    val t0 = System.nanoTime()
+    build(spark, src, dst, k)
+    println(f"[scaleprobe] wrote ${k}x replica of $src to $dst in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     spark.stop()
   }
 }

@@ -161,18 +161,7 @@ object Bpe {
     try {
       val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
       var done = false
-      // probe-only telemetry (SPARK_GRAFT_BPE_ROUND_LOG=64): cumulative
-      // wall time every N rounds, so the O(R²) re-segmentation growth —
-      // round r re-applies all r adopted merges to every vocab word — is
-      // measurable per PHASE instead of averaged away in the total
-      val roundLog = sys.env.get("SPARK_GRAFT_BPE_ROUND_LOG").map(_.toInt)
-      val tStart = System.nanoTime()
       while (learned.length < nMerges && !done) {
-        roundLog.foreach { n =>
-          if (learned.length % n == 0)
-            println(f"[graft] learnMerges round ${learned.length}: " +
-              f"${(System.nanoTime() - tStart) / 1e9}%.1f s cumulative")
-        }
         val cur: Seq[(String, String)] = learned.toSeq.map(m => (m._2, m._3))
         val top = v.flatMap { case (tok, n) =>
             segment(tok, cur).sliding(2).collect { case Vector(x, y) => (x, y, n) }

@@ -743,8 +743,7 @@ object Dedup {
     *    during materialization and would be invisible to a metrics walk
     *    over the returned result — it is surfaced HERE as a GUARD-ARMED
     *    stderr line at collection time. */
-  // private[graft]: the embingest ScaleProbe stages the per-batch cost
-  private[graft] def incrementCandidates(oldBanded: DataFrame, newBanded: DataFrame,
+  private def incrementCandidates(oldBanded: DataFrame, newBanded: DataFrame,
                                   nNewKeys: Long, bucketCap: Int,
                                   tag: String): DataFrame = {
     val probeKeys = newBanded.select(col("band"), col("bkey")).distinct()
@@ -2249,8 +2248,7 @@ object Dedup {
     * banding arithmetic as [[embeddingNearDupPairs]], single-sourced so
     * the index build, the increment probe, and the full-corpus tier can
     * never drift. */
-  // private[graft]: the embingest ScaleProbe stages the per-batch cost
-  private[graft] def embeddingBandedOf(e: DataFrame, nBands: Int, bandBits: Int,
+  private def embeddingBandedOf(e: DataFrame, nBands: Int, bandBits: Int,
                                 dim: Int): DataFrame = {
     // WHY a broadcast-planes mapPartitions, not the srpBucket expression
     // tree (round-16, the embingest probe's finding): 16 bands × 12 bits

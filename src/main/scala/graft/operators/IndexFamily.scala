@@ -416,17 +416,10 @@ object IndexFamily {
         .repartition(col("_p"))
         .write.partitionBy("_p").mode("overwrite").parquet(staging)
       // merge-cost telemetry (the §8.5.9 evidence line): state bytes the
-      // merge actually rewrote. The full-table denominator is a driver
-      // file listing ∝ TABLE file count per merge — a cost the merge
-      // itself no longer pays — so it is priced only when the probe asks
-      // (SPARK_GRAFT_MERGE_TELEMETRY=full), never on a production merge
-      def bytesOf(files: Seq[String]): Long =
-        files.map(f => fs.getFileStatus(hp(f)).getLen).sum
-      val affectedBytes = bytesOf(partitionFiles(s, path, affected))
-      val totalNote =
-        if (sys.env.get("SPARK_GRAFT_MERGE_TELEMETRY").contains("full"))
-          s" of ${bytesOf(snapshotFiles(s, path))} total"
-        else ""
+      // merge actually rewrote. No full-table denominator: it would list
+      // every TABLE file on each merge, a cost the merge itself avoids
+      val affectedBytes = partitionFiles(s, path, affected)
+        .map(f => fs.getFileStatus(hp(f)).getLen).sum
       affected.foreach { k =>
         val live = hp(s"$path/_p=$k")
         val fresh = hp(s"$staging/_p=$k")
@@ -438,7 +431,7 @@ object IndexFamily {
         fs.delete(park, true)
       }
       System.err.println(s"[graft] mergeTouched($path): rewrote ${affected.size}/$nParts " +
-        s"partitions ($affectedBytes state bytes$totalNote)")
+        s"partitions ($affectedBytes state bytes)")
       // the staging cleanup must happen INSIDE the lease: dropped after
       // release, a process stalling here could wipe a SUCCESSOR merge's
       // freshly-staged .rewrite mid-swap — its repair would then park a

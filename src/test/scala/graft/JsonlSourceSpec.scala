@@ -78,7 +78,10 @@ class JsonlSourceSpec extends AnyFunSuite with SparkTestBase {
     val df = JsonlSource.read(spark, dir.getAbsolutePath)
     assert(df.rdd.getNumPartitions > 1)
     // the counters are read off this frame's own executed plan, so the
-    // action must run it: `count()` plans a separate `groupBy().count()`
+    // action must run it: `count()` plans a separate `groupBy().count()`,
+    // after which the observation is absent rather than all zeros
+    assert(df.count() == 22L)
+    assert(!graft.Observed.metrics(df).contains("graft_parse"))
     assert(rows(df).map(_._1).sorted == ((0 until 20).map(i => s"a$i") ++ Seq("b0", "b1")).sorted)
     val m = graft.Observed.metrics(df)("graft_parse")
     assert(m.getAs[Long]("n_in") == (a.length + b.length).toLong)

@@ -20,7 +20,8 @@ import graft.operators.Dedup
   * Asserted, not narrated: candidate-count bounds on both paths, trim
   * telemetry magnitudes, and a wall-clock ordering (the capped run does
   * ≥10× less verify work and must not be slower). The at-scale reading of
-  * the same adversary is ScaleProbe's `skew` mode. */
+  * the same adversary is in SURVEY §8.5.7; the retired probe mode that
+  * took it is at `git show a8d165c:src/main/scala/graft/ScaleProbe.scala`. */
 class LshSkewSpec extends AnyFunSuite with SparkTestBase {
 
   private val nHot = 400

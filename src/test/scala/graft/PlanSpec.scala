@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan invariants — the "is this the plan you'd want at 100 TB"
   * checks, kept as specs so a regression in plan shape fails CI, not just
-  * a manual PlanProbe run.
+  * a manual `graft.PlanDump` of the query.
   */
 class PlanSpec extends AnyFunSuite with SparkTestBase {
 
