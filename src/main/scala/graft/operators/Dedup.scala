@@ -913,7 +913,7 @@ object Dedup {
     val cands = bandedCandidatePairs(banded, "doc_id", "doc_a", "doc_b", bucketCap)
     val pairs = verifyOnSignatures(cands, sigs, threshold)
     IndexFamily.writePartitioned(
-      clusterPairsTiered(pairs.select(col("doc_a"), col("doc_b")))
+      clusterPairs(pairs.select(col("doc_a"), col("doc_b")))
         .withColumn("keep", col("doc_id") === col("cluster_id"))
         .select(col("doc_id"), col("cluster_id"), col("keep")),
       s"$indexDir/clusters.parquet", "cluster_id", nParts)
@@ -959,7 +959,6 @@ object Dedup {
     * finding): marker before the first partition swap, projection merge,
     * marker dropped only after both tables landed. */
   private def commitStateAndProjection(s: SparkSession, indexDir: String,
-                                       useProjection: Boolean,
                                        touchedLabels: DataFrame,
                                        newState: DataFrame,
                                        touchedMembers: DataFrame,
@@ -967,13 +966,11 @@ object Dedup {
     val statePath = s"$indexDir/clusters.parquet"
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (useProjection) fs.create(stateTxnMarker(statePath), true).close()
+    fs.create(stateTxnMarker(statePath), true).close()
     IndexFamily.mergeTouched(s, statePath, "cluster_id", touchedLabels, newState)
-    if (useProjection) {
-      IndexFamily.mergeTouched(s, memberLookupPath(indexDir), "doc_id",
-        touchedMembers, memberRows)
-      fs.delete(stateTxnMarker(statePath), false)
-    }
+    IndexFamily.mergeTouched(s, memberLookupPath(indexDir), "doc_id",
+      touchedMembers, memberRows)
+    fs.delete(stateTxnMarker(statePath), false)
   }
 
   /** Operator-facing `.txn` repair ([[graft.IndexAdmin]] `--release`,
@@ -989,27 +986,31 @@ object Dedup {
     fs.exists(stateTxnMarker(statePath)) && { ensureMemberLookup(s, indexDir); true }
   }
 
-  /** Repair a torn two-table commit if its intent marker is present;
-    * returns whether the projection is usable afterwards (false = no
-    * projection built at all — the pre-round-14 full-snapshot lookup). */
-  private def ensureMemberLookup(s: SparkSession, indexDir: String): Boolean = {
+  /** Make the member projection usable before a lookup: rebuild it from
+    * the authoritative labels when a torn two-table commit left its intent
+    * marker, or when it is missing altogether (a crash between
+    * [[buildClusterState]]'s label write and its projection write). */
+  private def ensureMemberLookup(s: SparkSession, indexDir: String): Unit = {
     val statePath = s"$indexDir/clusters.parquet"
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val marker = stateTxnMarker(statePath)
     val hasProjection = fs.exists(
       new org.apache.hadoop.fs.Path(memberLookupPath(indexDir) + ".parts"))
-    if (fs.exists(marker)) {
-      System.err.println(s"[graft] TORN STATE TXN at $statePath — a crash between " +
-        "the label merge and the lookup-projection merge left members.parquet at " +
-        "the previous generation; rebuilding it from the authoritative labels")
+    val torn = fs.exists(marker)
+    if (torn || !hasProjection) {
+      System.err.println(
+        if (torn) s"[graft] TORN STATE TXN at $statePath — a crash between " +
+          "the label merge and the lookup-projection merge left members.parquet at " +
+          "the previous generation; rebuilding it from the authoritative labels"
+        else s"[graft] MISSING members.parquet next to $statePath — a crash " +
+          "inside buildClusterState; rebuilding it from the authoritative labels")
       val nParts =
         if (hasProjection) IndexFamily.partsOf(s, memberLookupPath(indexDir))
         else IndexFamily.partsOf(s, statePath)
       rebuildMemberLookup(s, indexDir, nParts)
       fs.delete(marker, false)
-      true
-    } else hasProjection
+    }
   }
 
   /** Build and persist the EXACT-duplicate edge state next to the cluster
@@ -1079,36 +1080,10 @@ object Dedup {
     * still on `text_hash`. */
   private def keeperHashKey(textHash: Column): Column = xxhash64(textHash)
 
-  /** One-time migration of a legacy FLAT keeper table (pre-round-16
-    * builds) into the partitioned layout, under the table's own lease
-    * (the lease is non-reentrant — callers must NOT already hold it).
-    * The `.parts` existence check re-runs inside the lease, so two
-    * concurrent first-touchers migrate exactly once. The local checkpoint
-    * materializes the legacy rows before the in-place overwrite unlinks
-    * the files the plan would otherwise still read. */
-  private def migrateLegacyKeepers(s: SparkSession, indexDir: String): Unit = {
-    val path = keepersPathOf(indexDir)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path + ".parts")))
-      IndexFamily.withLease(s, path) {
-        if (!fs.exists(new org.apache.hadoop.fs.Path(path + ".parts"))) {
-          System.err.println(s"[graft] migrating legacy flat $path to the " +
-            s"hash-partitioned keeper layout (nParts=$KeeperParts, one-time)")
-          val legacy = graft.Checkpoints.local(
-            s.read.parquet(parquetPartFiles(s, path): _*)
-              .select(col("text_hash"), col("keep_id"))
-              .withColumn("hkey", keeperHashKey(col("text_hash"))))
-          IndexFamily.writePartitioned(legacy, path, "hkey", KeeperParts)
-          IndexFamily.writeIdBloom(s, path, "hkey") // seed the probe bloom
-          graft.Checkpoints.release(legacy)
-        }
-      }
-  }
-
   /** The exact-state ordering watermark: max doc_id ever presented to the
     * state, persisted as the keeper table's `.maxid` sidecar. Seeded from
-    * a one-off scan when missing (legacy index) — every ingested doc is
+    * a one-off scan when missing (a state built without it, or a reset
+    * watermark) — every ingested doc is
     * either a stored keeper or an edge's `doc_a`, so the max over both
     * columns IS the true max. */
   private def exactStateWatermark(s: SparkSession, indexDir: String): Long =
@@ -1139,14 +1114,9 @@ object Dedup {
     * existed. */
   private[graft] def foldKeeperDelta(s: SparkSession, indexDir: String): Boolean = {
     val path = keepersPathOf(indexDir)
-    // a LEGACY flat keeper table (pre-partitioned-layout build) has no
-    // `.parts` handshake and no hkey column, and flatDeltaFiles would
-    // return its own DATA files — migrate first (no-op once partitioned),
-    // after which the delta is empty by construction. Self-defending here
-    // covers every caller: compactIndex/compactIfNeeded reach this fold
-    // WITHOUT the appendExactState path's own migrate call (round-16
-    // advice: compaction crashed on every legacy exact-state index).
-    migrateLegacyKeepers(s, indexDir)
+    // the layout handshake first: on a table without `.parts`,
+    // flatDeltaFiles would return the table's own DATA files as a "delta"
+    IndexFamily.partsOf(s, path)
     val deltaFiles = IndexFamily.flatDeltaFiles(s, path)
     if (deltaFiles.isEmpty) return false
     IndexFamily.withLease(s, path) {
@@ -1224,7 +1194,6 @@ object Dedup {
     // takedown-grain), but the REWRITE then swaps only the partitions
     // those groups hash into, via the shared mergeTouched machinery.
     if (hasExactKeepers(s, indexDir)) {
-      migrateLegacyKeepers(s, indexDir)
       // fold the append delta first: the partition-scoped rewrite below
       // cannot see (or re-key) rows still sitting in flat delta files
       foldKeeperDelta(s, indexDir)
@@ -1271,10 +1240,9 @@ object Dedup {
     * swapped; every other partition keeps its files byte-identical — the
     * per-batch cost is ∝ touched partitions, no longer ∝ state (round-13
     * verdict task 1; the §8.5.9 clusterseq rows carry the measurement).
-    * The one remaining full-state read is the member→label LOOKUP (state
-    * is keyed by `cluster_id`, the lookup by `doc_id`): a column-pruned
-    * scan of two thin columns, served by a doc_id bloom/zorder on a
-    * deployment table format. */
+    * The member→label LOOKUP (state is keyed by `cluster_id`, the lookup
+    * by `doc_id`) reads the doc_id-partitioned `members.parquet`
+    * projection, so it too is ∝ touched partitions. */
   def clusterIncrement(s: SparkSession, newDocs: DataFrame, indexDir: String,
                        memoKey: String, threshold: Double = 0.5,
                        bucketCap: Int = HotBucketCap,
@@ -1288,9 +1256,9 @@ object Dedup {
     // deleteFromDedupIndex of the batch ids + retry)
     if (append) IndexFamily.requireNoLease(s, statePath,
       "clusterIncrement (state-merge pre-check)")
-    // repair any torn two-table commit FIRST (the .txn marker discipline),
-    // then decide which lookup serves this increment
-    val useProjection = ensureMemberLookup(s, indexDir)
+    // repair any torn two-table commit FIRST (the .txn marker discipline)
+    ensureMemberLookup(s, indexDir)
+    val mp = memberLookupPath(indexDir)
     val newPairs = graft.Checkpoints.local(
       dedupIncrement(s, newDocs, indexDir, memoKey, threshold, bucketCap, append,
           strictIds)
@@ -1323,15 +1291,9 @@ object Dedup {
         // round trip 1 — member→label lookup, partitions computed
         // driver-side from the collected doc ids (one job)
         val labelArr: Array[Long] =
-          (if (useProjection) {
-            val mp = memberLookupPath(indexDir)
-            IndexFamily.readPartitions(s, mp,
-                partsFor(touchedDocArr, IndexFamily.partsOf(s, mp)))
-              .join(broadcast(touchedDocsLocal), Seq("doc_id"), "left_semi")
-          } else
-            IndexFamily.readSnapshot(s, statePath)
-              .select(col("doc_id"), col("cluster_id"))
-              .join(broadcast(touchedDocsLocal), Seq("doc_id"), "left_semi"))
+          IndexFamily.readPartitions(s, mp,
+              partsFor(touchedDocArr, IndexFamily.partsOf(s, mp)))
+            .join(broadcast(touchedDocsLocal), Seq("doc_id"), "left_semi")
             .select(col("cluster_id")).distinct().collect().map(_.getLong(0))
         // round trip 2 — membership of touched components from the
         // cluster_id-colocated state partitions (one job); the limit
@@ -1352,7 +1314,7 @@ object Dedup {
           val relabeled = localCcLabels(s, edges.result())
             .withColumn("keep", col("doc_id") === col("cluster_id"))
           if (append)
-            commitStateAndProjection(s, indexDir, useProjection,
+            commitStateAndProjection(s, indexDir,
               labelsLocal.select(col("cluster_id")),
               relabeled.select(col("doc_id"), col("cluster_id"), col("keep")),
               relabeled.select(col("doc_id")),
@@ -1370,23 +1332,15 @@ object Dedup {
       // the member→label LOOKUP: against the doc_id-keyed projection it
       // reads only the partitions the batch's doc_ids hash into (round-14
       // verdict task 2 — this was the one remaining full-state read in the
-      // daily path); a projection-less legacy state falls back to the full
-      // snapshot scan. Either way the read is a SNAPSHOT (explicit file
-      // list) taken before the merge swaps anything. Eagerly materialized:
-      // the partition-set collect, the membership semi-join, and the
-      // merge's affected/anti-join legs all consume it.
+      // daily path). The read is a SNAPSHOT (explicit file list) taken
+      // before the merge swaps anything. Eagerly materialized: the
+      // partition-set collect, the membership semi-join, and the merge's
+      // affected/anti-join legs all consume it.
       val touchedLabelsRaw = graft.Checkpoints.local(
-        if (useProjection) {
-          val mp = memberLookupPath(indexDir)
-          IndexFamily.readPartitions(s, mp,
-              IndexFamily.touchedPartitions(s, mp, touchedDocs, "doc_id"))
-            .join(touchedDocs, Seq("doc_id"), "left_semi")
-            .select(col("cluster_id")).distinct()
-        } else
-          IndexFamily.readSnapshot(s, statePath)
-            .select(col("doc_id"), col("cluster_id"))
-            .join(touchedDocs, Seq("doc_id"), "left_semi")
-            .select(col("cluster_id")).distinct())
+        IndexFamily.readPartitions(s, mp,
+            IndexFamily.touchedPartitions(s, mp, touchedDocs, "doc_id"))
+          .join(touchedDocs, Seq("doc_id"), "left_semi")
+          .select(col("cluster_id")).distinct())
       val touchedLabels = IndexFamily.maybeBroadcast(touchedLabelsRaw, 2 * nPairs)
       // membership of touched components: read ONLY the partitions their
       // labels hash into (rows colocate by cluster_id — the layout's point)
@@ -1395,19 +1349,19 @@ object Dedup {
         .join(touchedLabels, Seq("cluster_id"), "left_semi")
       val starEdges = touchedState.filter(col("doc_id") =!= col("cluster_id"))
         .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
-      // clusterPairsTiered materializes its input up front (collected under
+      // clusterPairs materializes its input up front (collected under
       // the local bound, checkpointed above it), so the returned labels no
       // longer reference the snapshot files the merge swaps away; the
       // touched subgraph of a daily batch sits under the bound and takes the
       // job-launch-free local tier
-      val relabeled = clusterPairsTiered(starEdges.unionByName(newPairs))
+      val relabeled = clusterPairs(starEdges.unionByName(newPairs))
         .withColumn("keep", col("doc_id") === col("cluster_id"))
       if (append)
         // every member of a batch-touching component gets its (possibly
         // unchanged) fresh label in BOTH tables; a crash inside the commit
         // window is repaired by the next increment's ensureMemberLookup
         // (projection rebuilt from the authoritative labels)
-        commitStateAndProjection(s, indexDir, useProjection,
+        commitStateAndProjection(s, indexDir,
           touchedLabelsRaw.select(col("cluster_id")),
           relabeled.select(col("doc_id"), col("cluster_id"), col("keep")),
           relabeled.select(col("doc_id")),
@@ -1632,9 +1586,8 @@ object Dedup {
     *     fpp·batch) read their `_p` partitions
     *     ([[IndexFamily.readPartitions]]) — per-batch base bytes ∝
     *     maybes × partition size, FLAT in keeper count (§8.5.16 prices it
-    *     1M vs 10M keepers); a sidecar-less table (legacy, mid-migration)
-    *     degrades to reading ALL batch partitions — still pruned, never
-    *     the full table;
+    *     1M vs 10M keepers); a sidecar-less table degrades to reading
+    *     ALL batch partitions — still pruned, never the full table;
     *  3. DELTA: the flat append delta ([[IndexFamily.flatDeltaFiles]]) is
     *     read wholesale every probe — it is batch-scale × batches-since-
     *     fold, and [[foldKeeperDelta]] (compaction / the delete path /
@@ -1648,7 +1601,7 @@ object Dedup {
     * bloom rewrite per batch: a stored hash is either in the base (bloom
     * covers it — stale-LOW impossible because the bloom is rebuilt BEFORE
     * a fold's partition merge lands) or in the delta (read regardless of
-    * the bloom). A legacy flat table migrates once on first touch.
+    * the bloom).
     *
     * ORDERING warning (round-15 advice): the keeper-minimality convention
     * (keeper = global group minimum) rides ascending ingest ids. The
@@ -1670,12 +1623,13 @@ object Dedup {
         "reads persisted keepers; run Dedup.buildExactState(corpus, indexDir) " +
         "at index build (the batch increment gates on it; a stream with " +
         "maintainExactState must be pointed at an index built WITH exact state)")
-    migrateLegacyKeepers(s, indexDir) // no-op once partitioned (own lease)
     // self-maintaining delta (the compactIfNeeded telemetry trigger,
     // in-line because the stream path owns no maintenance cadence): one
     // flat file lands per batch, and past the threshold the probe's
     // rung-3 delta read would start to dominate — fold BEFORE taking the
-    // append lease (fold takes its own)
+    // append lease (fold takes its own). A table without the `.parts`
+    // handshake fails in partsOf before any read: in the fold, or under
+    // the lease below.
     if (IndexFamily.flatDeltaFiles(s, keepersPathOf(indexDir)).size > 64)
       foldKeeperDelta(s, indexDir)
     // the keeper lease covers the stored READ too, not just the append:
@@ -2196,13 +2150,6 @@ object Dedup {
   private[graft] def embStateParts(nVectors: Long): Int =
     math.max(16L, math.min(4096L, (nVectors + 4095L) / 4096L)).toInt
 
-  /** The embedding postings table's layout key: one hash over the probe
-    * pair `(band, bkey)` — stored in the files (the keeper table's hkey
-    * convention) so maintenance rewrites scatter rows without re-deriving
-    * it. */
-  private def postingKey(band: Column, bkey: Column): Column =
-    xxhash64(band, bkey)
-
   /** §8.5.17 probe telemetry: the last increment's verify-read pruning —
     * `(partitions touched, total partitions)` and bytes opened. */
   @volatile private[graft] var lastVerifyReadParts: (Int, Int) = (0, 0)
@@ -2314,23 +2261,16 @@ object Dedup {
       s"index at $indexDir built with (bands,bits,dim)=" +
         s"(${meta.getInt(0)},${meta.getInt(1)},${meta.getInt(2)}); " +
         s"caller passed ($nBands,$bandBits,$dim) — rebuild the index")
+    // vectors are doc_id-partitioned, postings flat (see the build's
+    // rationale)
     val postingsPath = s"$indexDir/postings.parquet"
     val vectorsPath = s"$indexDir/vectors.parquet"
-    // per-TABLE layout detection: round-17 indexes partition vectors only
-    // (postings measured all-touched at every grain — see the build's
-    // rationale); a transitional round-17-dev index with partitioned
-    // postings and a pre-r17 flat index both serve correctly through the
-    // same branches
-    val partitionedVecs = IndexFamily.hasParts(s, vectorsPath)
-    val partitionedPostings = IndexFamily.hasParts(s, postingsPath)
-    if (partitionedVecs && append) {
-      // self-maintaining delta fold (the stream path owns no maintenance
-      // cadence — the appendExactState convention): past the threshold
-      // the wholesale delta read would start to dominate the pruned base.
-      // Gated on `append` — a read-only probe must not mutate the index
-      if (IndexFamily.flatDeltaFiles(s, vectorsPath).size > 64)
-        IndexFamily.foldDelta(s, vectorsPath, "doc_id")
-    }
+    // self-maintaining delta fold (the stream path owns no maintenance
+    // cadence — the appendExactState convention): past the threshold the
+    // wholesale delta read would start to dominate the pruned base. Gated
+    // on `append` — a read-only probe must not mutate the index
+    if (append && IndexFamily.flatDeltaFiles(s, vectorsPath).size > 64)
+      IndexFamily.foldDelta(s, vectorsPath, "doc_id")
     // registry checkpoint, not .cache() — the per-micro-batch strong-ref
     // accumulation argument at dedupIncrement's newSigs
     val newE = graft.Checkpoints.local(
@@ -2344,41 +2284,35 @@ object Dedup {
       embeddingBandedOf(newE, nBands, bandBits, dim))
     val newBandedFlagged = newBanded.withColumn("is_new", lit(true))
     // the postings probe: a columnar 24-byte/row broadcast-semi-join scan
-    // (snapshot read covers a partitioned transitional layout's delta)
-    val oldBanded =
-      (if (partitionedPostings) IndexFamily.readSnapshot(s, postingsPath)
-       else s.read.parquet(parquetPartFiles(s, postingsPath): _*))
-        .select(col("doc_id"), col("band"), col("bkey"))
+    val oldBanded = s.read.parquet(parquetPartFiles(s, postingsPath): _*)
+      .select(col("doc_id"), col("band"), col("bkey"))
     val cands = graft.Checkpoints.local(incrementCandidates(oldBanded,
       newBandedFlagged, nNew * nBands, Int.MaxValue, "embeddingDedupIncrement"))
     // PRUNED verify read: the exact-cosine join needs stored vectors only
     // for ids a candidate pair touches — read their doc_id partitions
     // (∝ candidate ids × ~constant partition size, never ∝ index) plus
     // the wholesale flat delta; batch vectors come from newE
-    val storedVecs =
-      if (partitionedVecs) {
-        val candIds = cands.select(
-          explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
-        val touched = IndexFamily.touchedPartitions(s, vectorsPath,
-          candIds, "doc_id")
-        val files = IndexFamily.partitionFiles(s, vectorsPath, touched)
-        // §8.5.17 telemetry: the verify read's realized pruning — parts
-        // touched / total and bytes actually opened (the law is in BYTES
-        // at probe scale, where walls sit inside scheduler noise)
-        val fsys = new org.apache.hadoop.fs.Path(vectorsPath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        lastVerifyReadParts = (touched.size, IndexFamily.partsOf(s, vectorsPath))
-        lastVerifyReadBytes = files.map(f =>
-          fsys.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-        val base =
-          if (files.nonEmpty) s.read.parquet(files: _*)
-          else IndexFamily.readSnapshot(s, vectorsPath).limit(0)
-        val deltaF = IndexFamily.flatDeltaFiles(s, vectorsPath)
-        if (deltaF.isEmpty) base
-        else base.unionByName(s.read.parquet(deltaF: _*))
-      } else {
-        s.read.parquet(parquetPartFiles(s, vectorsPath): _*)
-      }
+    val storedVecs = {
+      val candIds = cands.select(
+        explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
+      val touched = IndexFamily.touchedPartitions(s, vectorsPath,
+        candIds, "doc_id")
+      val files = IndexFamily.partitionFiles(s, vectorsPath, touched)
+      // §8.5.17 telemetry: the verify read's realized pruning — parts
+      // touched / total and bytes actually opened (the law is in BYTES
+      // at probe scale, where walls sit inside scheduler noise)
+      val fsys = new org.apache.hadoop.fs.Path(vectorsPath)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      lastVerifyReadParts = (touched.size, IndexFamily.partsOf(s, vectorsPath))
+      lastVerifyReadBytes = files.map(f =>
+        fsys.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
+      val base =
+        if (files.nonEmpty) s.read.parquet(files: _*)
+        else IndexFamily.readSnapshot(s, vectorsPath).limit(0)
+      val deltaF = IndexFamily.flatDeltaFiles(s, vectorsPath)
+      if (deltaF.isEmpty) base
+      else base.unionByName(s.read.parquet(deltaF: _*))
+    }
     val allVecs = storedVecs.unionByName(newE)
     // broadcast-bound on the TRUE candidate count, not the batch-postings
     // proxy the text families use: the embedding probe is deliberately
@@ -2400,19 +2334,14 @@ object Dedup {
         floor(col("cos_sim") * lit(10000.0) + lit(0.5)).cast("long").as("cos_e4"))
     if (append) {
       // gated append contract + sidecar advance + lease-held sized write,
-      // like dedupIncrement's (IndexFamily.appendWithIdGuards). On the
-      // partitioned layout both appends land as FLAT root files — the LSM
-      // delta (one sized write per batch, no per-partition file spray;
-      // folded by the in-line trigger above / compactIndex)
+      // like dedupIncrement's (IndexFamily.appendWithIdGuards). The
+      // vectors append lands as FLAT root files — the LSM delta (one sized
+      // write per batch, no per-partition file spray; folded by the
+      // in-line trigger above / compactIndex)
       IndexFamily.appendWithIdGuards(newE, vectorsPath,
         "doc_id", nNew, appendFileCount(nNew), "embeddingDedupIncrement", strictIds)
       IndexFamily.withLease(s, postingsPath) {
-        // transitional partitioned-postings layout carries pkey in the
-        // files; flat (the round-17 shape) appends the banding as-is
-        val rows = if (partitionedPostings)
-          newBanded.withColumn("pkey", postingKey(col("band"), col("bkey")))
-        else newBanded
-        rows.coalesce(appendFileCount(nNew * nBands))
+        newBanded.coalesce(appendFileCount(nNew * nBands))
           .write.mode("append").parquet(postingsPath)
       }
     }
@@ -2521,18 +2450,14 @@ object Dedup {
     // semantically harmless, see StreamDedup.nearDupAgainstIndex, but
     // wasted bytes): rows are naturally unique per (doc, band) on a clean
     // index, so this is a no-op there and the purity law holds either way.
-    // PARTITIONED tables (the round-17 embedding layout) compact through
-    // rewritePartitioned — a rewriteSwap would flatten the layout the
-    // increments' pruned probes depend on; it also absorbs the LSM delta
-    val postingsPath = s"$indexDir/postings.parquet"
-    if (IndexFamily.hasParts(s, postingsPath))
-      IndexFamily.rewritePartitioned(s, postingsPath, "pkey",
-        sortCols = Seq("band", "bkey"))(_.distinct())
-    else
-      IndexMaintenance.rewriteSwap(s, postingsPath)(
-        _.distinct()
-          .repartition(nFiles, col("band"), col("bkey"))
-          .sortWithinPartitions("band", "bkey"))
+    // Postings are flat in every family; the embedding family's
+    // PARTITIONED vectors table compacts through rewritePartitioned — a
+    // rewriteSwap would flatten the layout the increments' pruned probes
+    // depend on; it also absorbs the LSM delta
+    IndexMaintenance.rewriteSwap(s, s"$indexDir/postings.parquet")(
+      _.distinct()
+        .repartition(nFiles, col("band"), col("bkey"))
+        .sortWithinPartitions("band", "bkey"))
     val perDocPath = s"$indexDir/${perDocTableOf(s, indexDir)}"
     if (IndexFamily.hasParts(s, perDocPath))
       IndexFamily.rewritePartitioned(s, perDocPath, "doc_id",
@@ -2571,13 +2496,7 @@ object Dedup {
     * whether the batch was 500 docs or 5M). Returns whether it fired. */
   def compactIfNeeded(s: SparkSession, indexDir: String,
                       maxPartFiles: Int = 64, nFiles: Int = 8): Boolean = {
-    val postingsPath = s"$indexDir/postings.parquet"
-    // on the partitioned layout the signal is the LSM delta's file count
-    // — the base holds ~nParts files permanently by design, so the total
-    // would fire a (pointless) full rewrite on every call
-    val n = if (IndexFamily.hasParts(s, postingsPath))
-              IndexFamily.flatDeltaFiles(s, postingsPath).size
-            else IndexMaintenance.partFileCount(s, postingsPath)
+    val n = IndexMaintenance.partFileCount(s, s"$indexDir/postings.parquet")
     val fire = n > maxPartFiles
     if (fire) {
       System.err.println(s"[graft] compactIndex($indexDir): " +
@@ -2627,23 +2546,23 @@ object Dedup {
           IndexFamily.readSnapshot(s, statePath)
             .select(col("doc_id"), col("cluster_id"))))
       else None
-    // partitioned tables (the round-17 embedding layout) rewrite-filter
-    // IN layout — a rewriteSwap would flatten them
-    def rewriteFiltered(path: String, keyCol: String): Unit =
-      if (IndexFamily.hasParts(s, path))
-        IndexFamily.rewritePartitioned(s, path, keyCol)(
-          _.join(ids, Seq("doc_id"), "left_anti"))
-      else
-        IndexMaintenance.rewriteSwap(s, path)(
-          _.join(ids, Seq("doc_id"), "left_anti"))
-    rewriteFiltered(s"$indexDir/postings.parquet", "pkey")
-    rewriteFiltered(s"$indexDir/${perDocTableOf(s, indexDir)}", "doc_id")
+    IndexMaintenance.rewriteSwap(s, s"$indexDir/postings.parquet")(
+      _.join(ids, Seq("doc_id"), "left_anti"))
+    // the embedding family's partitioned vectors table rewrite-filters IN
+    // layout — a rewriteSwap would flatten it
+    val perDocPath = s"$indexDir/${perDocTableOf(s, indexDir)}"
+    if (IndexFamily.hasParts(s, perDocPath))
+      IndexFamily.rewritePartitioned(s, perDocPath, "doc_id")(
+        _.join(ids, Seq("doc_id"), "left_anti"))
+    else
+      IndexMaintenance.rewriteSwap(s, perDocPath)(
+        _.join(ids, Seq("doc_id"), "left_anti"))
     val exactP = new org.apache.hadoop.fs.Path(s"$indexDir/exact_edges.parquet")
     if (exactP.getFileSystem(s.sparkContext.hadoopConfiguration).exists(exactP))
       deleteFromExactState(s, indexDir, ids)
     state.foreach { st =>
       // repair any torn two-table commit before touching the projection
-      val useProjection = ensureMemberLookup(s, indexDir)
+      ensureMemberLookup(s, indexDir)
       val touchedLabels = broadcast(
         st.join(ids, Seq("doc_id"), "left_semi").select(col("cluster_id")).distinct())
       // PRE-delete membership of touched components INCLUDING the deleted
@@ -2664,13 +2583,13 @@ object Dedup {
       val pairs = verifyOnSignatures(
         bandedCandidatePairs(banded, "doc_id", "doc_a", "doc_b", bucketCap),
         sigs, threshold)
-      val relabeled = clusterPairsTiered(pairs.select(col("doc_a"), col("doc_b")))
+      val relabeled = clusterPairs(pairs.select(col("doc_a"), col("doc_b")))
       // two-table commit under the .txn marker, like clusterIncrement's.
       // Partition-scoped: only directories holding a touched (or
       // re-elected) label are swapped — a takedown's state cost is ∝ its
       // components; deleted docs are touched projection keys with no new
       // row (their rows drop), survivors get their fresh labels
-      commitStateAndProjection(s, indexDir, useProjection,
+      commitStateAndProjection(s, indexDir,
         touchedLabels.select(col("cluster_id")),
         relabeled.withColumn("keep", col("doc_id") === col("cluster_id"))
           .select(col("doc_id"), col("cluster_id"), col("keep")),
@@ -2810,7 +2729,7 @@ object Dedup {
     *     a self-join keyed on `cid` — ids only ride the quadratic join,
     *     vectors attach to the surviving candidate rows);
     *  3. semantic groups = connected components of the ≥ tau graph
-    *     ([[clusterPairsTiered]] — the paper's greedy grouping made
+    *     ([[clusterPairs]] — the paper's greedy grouping made
     *     order-independent);
     *  4. per group, KEEP the member with the LOWEST cosine to its centroid
     *     (the paper's rule: retain the most atypical exemplar, preserving
@@ -2873,9 +2792,9 @@ object Dedup {
       .filter(VectorOps.cosinePrenormed(col("v_a"), col("v_b"),
         col("n_a"), col("n_b")) >= tau)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    // tiered CC materializes `pairs` eagerly (count + checkpoint), so the
+    // clusterPairs materializes `pairs` eagerly (count + checkpoint), so the
     // cached assignment is fully reused before it is released below
-    val labels = clusterPairsTiered(pairs)
+    val labels = clusterPairs(pairs)
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
     val lab = graft.Checkpoints.local(
       asg.select(col("vec_id"), col("cid"), col("cent_e4"))
@@ -3143,13 +3062,8 @@ object Dedup {
                              strictIds: Boolean = true): DataFrame = {
     val meta = readMetaRow(s, indexDir)
     val tau = meta.getDouble(2)
-    // the build-frozen assignment depth (round-16 verdict task 3);
-    // pre-r17 indexes carry no n_probe column and load as the historical
-    // fixed 2 they were built with
-    val storedProbe =
-      if (meta.schema.fieldNames.contains("n_probe"))
-        meta.getInt(meta.fieldIndex("n_probe"))
-      else 2
+    // the build-frozen assignment depth (round-16 verdict task 3)
+    val storedProbe = meta.getInt(meta.fieldIndex("n_probe"))
     val cents: Seq[Seq[Double]] = s.read.parquet(s"$indexDir/model.parquet")
       .orderBy(col("cid")).collect()
       .map(r => r.getSeq[Double](1).toSeq).toSeq
@@ -3176,32 +3090,27 @@ object Dedup {
     // on touched-group member vec_ids, and every member of a touched
     // group shares its cell with a batch vector because semantic pairs
     // are same-cell by construction) — plus the wholesale flat delta
-    // (∝ batches since fold, the keeper ladder's rung 3). Legacy flat
-    // indexes (no .parts) keep the full-scan read.
-    val oldAsg =
-      if (IndexFamily.hasParts(s, vecsPath)) {
-        if (append &&
-            IndexFamily.flatDeltaFiles(s, vecsPath).size > 64)
-          IndexFamily.foldDelta(s, vecsPath, "cid")
-        val touched = IndexFamily.touchedPartitions(s, vecsPath,
-          newAsg.select(col("cid")), "cid")
-        val files = IndexFamily.partitionFiles(s, vecsPath, touched)
-        // §8.5.17 telemetry (the embedding family's convention): the
-        // touched-cells read's realized pruning in partitions and bytes
-        val fsys = new org.apache.hadoop.fs.Path(vecsPath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        lastSemReadParts = (touched.size, IndexFamily.partsOf(s, vecsPath))
-        lastSemReadBytes = files.map(f =>
-          fsys.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-        val base =
-          if (files.nonEmpty) s.read.parquet(files: _*)
-          else IndexFamily.readSnapshot(s, vecsPath).limit(0)
-        val deltaF = IndexFamily.flatDeltaFiles(s, vecsPath)
-        if (deltaF.isEmpty) base
-        else base.unionByName(s.read.parquet(deltaF: _*))
-      } else {
-        s.read.parquet(parquetPartFiles(s, vecsPath): _*)
-      }
+    // (∝ batches since fold, the keeper ladder's rung 3).
+    val oldAsg = {
+      if (append && IndexFamily.flatDeltaFiles(s, vecsPath).size > 64)
+        IndexFamily.foldDelta(s, vecsPath, "cid")
+      val touched = IndexFamily.touchedPartitions(s, vecsPath,
+        newAsg.select(col("cid")), "cid")
+      val files = IndexFamily.partitionFiles(s, vecsPath, touched)
+      // §8.5.17 telemetry (the embedding family's convention): the
+      // touched-cells read's realized pruning in partitions and bytes
+      val fsys = new org.apache.hadoop.fs.Path(vecsPath)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      lastSemReadParts = (touched.size, IndexFamily.partsOf(s, vecsPath))
+      lastSemReadBytes = files.map(f =>
+        fsys.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
+      val base =
+        if (files.nonEmpty) s.read.parquet(files: _*)
+        else IndexFamily.readSnapshot(s, vecsPath).limit(0)
+      val deltaF = IndexFamily.flatDeltaFiles(s, vecsPath)
+      if (deltaF.isEmpty) base
+      else base.unionByName(s.read.parquet(deltaF: _*))
+    }
     val touchedOld = oldAsg.join(batchCells, Seq("cid"), "left_semi")
       .withColumn("is_new", lit(false))
     val allSide = touchedOld.unionByName(newAsg.withColumn("is_new", lit(true)))
@@ -3234,7 +3143,7 @@ object Dedup {
       .join(touchedLabels, Seq("cluster_id"), "left_semi")
     val starEdges = touchedState.filter(col("vec_id") =!= col("cluster_id"))
       .select(col("vec_id").as("doc_a"), col("cluster_id").as("doc_b"))
-    val relabeled = clusterPairsTiered(starEdges.unionByName(newPairs))
+    val relabeled = clusterPairs(starEdges.unionByName(newPairs))
     val centE = oldAsg.select(col("vec_id"), col("cid"), col("cent_e4"))
       .unionByName(newAsg.select(col("vec_id"), col("cid"), col("cent_e4")))
     val labCore = relabeled.select(col("doc_id").as("vec_id"), col("cluster_id"))
@@ -3267,20 +3176,15 @@ object Dedup {
   }
 
   /** COMPACT a semantic index: appended assignment files accumulate like
-    * every other family's; rewrite `vectors.parquet` repartitioned+sorted
-    * by `(cid, vec_id)` — `cid` is the increment probe's leading key, so
-    * rowgroup stats prune cells a batch never touches — and the group
-    * state by `cluster_id`. Pure reorganization (`distinct()` also repairs
-    * any torn-append duplication, as for [[compactIndex]]). */
-  def compactSemanticIndex(s: SparkSession, indexDir: String, nFiles: Int = 8): Unit = {
-    // partitioned layout (round 17) compacts in layout, absorbing the LSM
-    // delta; legacy flat indexes keep the rewriteSwap
-    if (IndexFamily.hasParts(s, s"$indexDir/vectors.parquet"))
-      IndexFamily.rewritePartitioned(s, s"$indexDir/vectors.parquet", "cid",
-        sortCols = Seq("cid", "vec_id"))(_.distinct())
-    else IndexMaintenance.rewriteSwap(s, s"$indexDir/vectors.parquet")(
-      _.distinct()
-        .repartition(nFiles, col("cid")).sortWithinPartitions("cid", "vec_id"))
+    * every other family's; rewrite the cid partitions of `vectors.parquet`
+    * (absorbing the LSM delta) sorted by `(cid, vec_id)` — `cid` is the
+    * increment probe's leading key, so rowgroup stats prune cells a batch
+    * never touches — and the group state by `cluster_id`. Pure
+    * reorganization (`distinct()` also repairs any torn-append
+    * duplication, as for [[compactIndex]]). */
+  def compactSemanticIndex(s: SparkSession, indexDir: String): Unit = {
+    IndexFamily.rewritePartitioned(s, s"$indexDir/vectors.parquet", "cid",
+      sortCols = Seq("cid", "vec_id"))(_.distinct())
     // re-tighten the bloom sidecar from the compacted content, under the
     // table lease (the compactIndex argument)
     if (IndexFamily.readIdBloom(s, s"$indexDir/vectors.parquet").isDefined)
@@ -3315,10 +3219,7 @@ object Dedup {
     val stFull = graft.Checkpoints.local(
       IndexFamily.readSnapshot(s, statePath)
         .select(col("vec_id"), col("cluster_id"), col("keep")))
-    if (IndexFamily.hasParts(s, s"$indexDir/vectors.parquet"))
-      IndexFamily.rewritePartitioned(s, s"$indexDir/vectors.parquet", "cid")(
-        _.join(ids, Seq("vec_id"), "left_anti"))
-    else IndexMaintenance.rewriteSwap(s, s"$indexDir/vectors.parquet")(
+    IndexFamily.rewritePartitioned(s, s"$indexDir/vectors.parquet", "cid")(
       _.join(ids, Seq("vec_id"), "left_anti"))
     val touchedLabels = broadcast(
       stFull.join(ids, Seq("vec_id"), "left_semi")
@@ -3338,7 +3239,7 @@ object Dedup {
       .filter(VectorOps.cosinePrenormed(col("v_a"), col("v_b"),
         col("n_a"), col("n_b")) >= tau)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val relabeled = clusterPairsTiered(pairs) // every node here is in ≥1 pair
+    val relabeled = clusterPairs(pairs) // every node here is in ≥1 pair
     val centE = asg.select(col("vec_id"), col("cent_e4"))
     val lab = relabeled.select(col("doc_id").as("vec_id"), col("cluster_id"))
       .join(centE, Seq("vec_id"))
@@ -3379,86 +3280,6 @@ object Dedup {
   // Near-dup cluster grouping (connected components)
   // -----------------------------------------------------------------
 
-  /** Connected components over a near-dup pair table: iterative
-    * neighbor-min label propagation to a fixpoint. Each round is one keyed
-    * join + one min-aggregation; `localCheckpoint` truncates the loop's
-    * lineage so plan size stays constant across iterations. Converges in
-    * O(component diameter) rounds — near-dup clusters are shallow (dup
-    * chains, not paths), so this is small; at 100 TB with adversarial
-    * graphs the same loop structure hosts large-star/small-star
-    * (O(log n) rounds) without changing the dataflow shape.
-    *
-    * Returns `(doc_id, cluster_id)` where `cluster_id` is the component's
-    * minimum doc_id — the canonical "keep" representative. */
-  def clusterPairs(pairs: DataFrame): DataFrame = {
-    // bidirect via explode, NOT `pairs.union(pairs.swapped)`: union
-    // branches are independent subtrees, so an uncached `pairs` (the LSH
-    // pipeline, in production) would execute TWICE — measured 7.5 s of a
-    // 13.6 s q_dedup_pipeline_lsh run before this shape. One scan, two
-    // rows per pair, same distinct edge set.
-    val edges = pairs
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().cache()
-    var labels = graft.Checkpoints.local(
-      edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("cluster_id")))
-    var prevCheckpoint = labels
-    var changed = 1L
-    while (changed > 0) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("cluster_id").as("nbr")), "dst")
-        .groupBy(col("src"))
-        .agg(min(col("nbr")).as("nbr_min"))
-        .select(col("src").as("id"), col("nbr_min"))
-      val stepped = graft.Checkpoints.local( // truncate lineage; cheap count
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id"))).as("cluster_id"),
-            (coalesce(col("nbr_min"), col("cluster_id")) < col("cluster_id")).as("chg")))
-      // stepped is materialized (eager checkpoint), so the previous round's
-      // blocks are dead weight from here — free them before the next round
-      graft.Checkpoints.release(prevCheckpoint)
-      prevCheckpoint = stepped
-      changed = stepped.filter(col("chg")).count()
-      labels = stepped.select(col("id"), col("cluster_id"))
-    }
-    edges.unpersist()
-    // only the FINAL round's checkpoint (the result's backing data) stays
-    // resident — constant, not per-iteration, storage; the caller frees it
-    // after consumption via graft.Checkpoints.releaseAll
-    labels.select(col("id").as("doc_id"), col("cluster_id"))
-  }
-
-  /** Connected components via alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the adversarial-graph tier of [[clusterPairs]]:
-    * neighbor-min label propagation needs O(component diameter) rounds (a
-    * k-node duplication CHAIN costs k rounds), while star alternation
-    * converges in O(log n) regardless of diameter.
-    *
-    * Per round: large-star hangs every strictly-larger neighbor of each
-    * node onto that node's minimum (one groupBy + one keyed join on the
-    * bidirected edge list); small-star re-hangs the smaller neighbors.
-    * Both are keyed aggregations/joins — no driver-side graph state, same
-    * checkpoint-release loop discipline as [[clusterPairs]]. At the
-    * fixpoint the edge set IS the star forest (u → component minimum).
-    *
-    * `maxRounds` is a convergence guard, not a tuning knob: hitting it
-    * throws rather than silently returning half-merged components.
-    *
-    * Degenerate self-pairs `(a,a)` are honored like [[clusterPairs]] does:
-    * `canon` drops self-loop EDGES (the alternation requires u ≠ v), but
-    * every node seen in the input — including ones appearing only in a
-    * self-pair — re-enters the output as its own root, so the two
-    * connected-components tiers agree on all inputs, not just the
-    * `doc_a < doc_b` streams our pair generators emit. */
-  def clusterPairsStar(pairs: DataFrame, maxRounds: Int = 50): DataFrame =
-    clusterPairsStarOn(graft.Checkpoints.local(
-      pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))), maxRounds)
-
   /** Driver-side bound for the LOCAL connected-components tier, in EDGES —
     * the same 2M convention as the library's broadcast bounds
     * ([[incrementCandidates]], [[clusterIncrement]]'s touched-label
@@ -3467,45 +3288,45 @@ object Dedup {
     * 16 B/edge). Above the bound the alternation runs distributed. */
   val LocalCcEdgeBound = 2000000L
 
-  /** Bounded LOCAL tier of connected components: collects the edge list
-    * and runs union-find (path halving) on the driver, labeling each node
-    * with its component minimum — the exact contract of
-    * [[clusterPairsStar]], including self-pair singletons. Exists for the
-    * INCREMENT path: a daily batch's touched subgraph is edge-bounded
-    * (∝ batch near-dup mass, not corpus), and the star alternation's
-    * per-round job launches (~10 tiny jobs at convergence) dominate its
-    * cost at that size. Callers should dispatch via [[clusterPairsTiered]]
-    * unless the input is known-bounded. */
-  def clusterPairsLocal(pairs: DataFrame): DataFrame =
-    localCcLabels(pairs.sparkSession,
-      pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))))
-
-  /** Two-tier connected components: one count of the (materialized) edge
-    * list decides between the driver-local union-find (≤ `localBelow`
-    * edges) and the distributed star alternation. Both tiers emit
-    * identical `(doc_id, cluster_id = component min)` labels
-    * (DedupSpec pins the law), so the dispatch is purely a cost choice —
-    * the increment path's touched subgraphs take the local tier and skip
-    * ~10 tiny convergence jobs; backfill-sized graphs fall back to the
-    * O(log n) alternation. Either way the result no longer references the
+  /** Connected components over a near-dup pair table `(doc_a, doc_b)`:
+    * returns `(doc_id, cluster_id)` where `cluster_id` is the component's
+    * minimum doc_id — the canonical "keep" representative. One count of
+    * the (materialized) edge list picks the tier; both emit identical
+    * labels (DedupSpec pins the law), so the dispatch is purely a cost
+    * choice:
+    *
+    *  - LOCAL (≤ `localBelow` edges): collect the edge list and run
+    *    union-find on the driver. The increment paths' touched subgraphs
+    *    are edge-bounded (∝ batch near-dup mass, not corpus) and take this
+    *    tier, skipping the alternation's ~10 tiny convergence jobs.
+    *    `localBelow = Long.MaxValue` always takes it.
+    *  - STAR (above the bound): alternating large-star / small-star
+    *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    *    SoCC'14), O(log n) rounds regardless of component diameter (a
+    *    k-node duplication CHAIN costs neighbor-min label propagation k
+    *    rounds). `localBelow = 0L` always takes it on a non-empty input.
+    *    `maxRounds` is a convergence guard, not a tuning knob: hitting it
+    *    throws rather than silently returning half-merged components.
+    *
+    * Degenerate self-pairs `(a,a)` are honored by both tiers: `a` appears
+    * as its own root. Either way the result no longer references the
     * input plan (collected or checkpointed), which [[clusterIncrement]]'s
     * snapshot-overwrite discipline relies on. */
-  def clusterPairsTiered(pairs: DataFrame,
-                         localBelow: Long = LocalCcEdgeBound,
-                         maxRounds: Int = 50): DataFrame = {
+  def clusterPairs(pairs: DataFrame,
+                   localBelow: Long = LocalCcEdgeBound,
+                   maxRounds: Int = 50): DataFrame = {
     val base = graft.Checkpoints.local(
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
     if (base.count() <= localBelow) {
       val edges = base.collect().map(r => (r.getLong(0), r.getLong(1)))
       graft.Checkpoints.release(base)
       localCcLabels(base.sparkSession, edges)
-    } else clusterPairsStarOn(base, maxRounds)
+    } else starCcLabels(base, maxRounds)
   }
 
   /** Union-find with path halving + union by minimum-carrying root; labels
     * are component minima, nodes are every endpoint seen (a self-pair
-    * contributes its node, matching both distributed tiers). */
+    * contributes its node, matching the star tier). */
   private def localCcLabels(s: SparkSession,
                             edges: Array[(Long, Long)]): DataFrame = {
     import s.implicits._
@@ -3534,7 +3355,13 @@ object Dedup {
       .toDF("doc_id", "cluster_id")
   }
 
-  private def clusterPairsStarOn(base: DataFrame, maxRounds: Int): DataFrame = {
+  /** The star tier of [[clusterPairs]]. Per round: large-star hangs every
+    * strictly-larger neighbor of each node onto that node's minimum (one
+    * groupBy + one keyed join on the bidirected edge list); small-star
+    * re-hangs the smaller neighbors. Both are keyed aggregations/joins —
+    * no driver-side graph state. At the fixpoint the edge set IS the star
+    * forest (u → component minimum). */
+  private def starCcLabels(base: DataFrame, maxRounds: Int): DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.filter(col("u") =!= col("v")).distinct()
     def largeStar(e: DataFrame): DataFrame = {
@@ -3567,7 +3394,7 @@ object Dedup {
        if (r.isNullAt(1)) 0L else r.getLong(1),
        if (r.isNullAt(2)) BigDecimal(0) else BigDecimal(r.getDecimal(2)))
     }
-    // `base` arrives materialized (checkpointed by the public wrappers):
+    // `base` arrives materialized (checkpointed by clusterPairs):
     // `canon` below and the singleton guard at the end both read it, and
     // each un-checkpointed reference would re-execute the whole upstream
     // pair pipeline (the LSH path, in production — the pre-fix shape paid
@@ -3593,7 +3420,7 @@ object Dedup {
     val assigned = edges.select(col("u").as("doc_id"), col("v").as("cluster_id")).union(roots)
     // nodes whose every input edge was a self-loop never reach the
     // alternation (canon drops u = v); label them their own root so the
-    // tier matches clusterPairs on degenerate inputs. Reads the
+    // tier matches the local tier on degenerate inputs. Reads the
     // checkpointed `base`, never `pairs` (see above).
     val singletons = base
       .select(explode(array(col("u"), col("v"))).as("doc_id"))
@@ -3605,24 +3432,23 @@ object Dedup {
 
   /** Near-dup clusters over the exact Jaccard pairs — the oracle-checkable
     * composition (the MinHash-LSH pairs feed the same `clusterPairs` at
-    * scale). */
+    * scale), on the default tier dispatch. */
   def nearDupClusters(s: SparkSession, dir: String): DataFrame =
     clusterPairs(ngramJaccardPairs(s, dir))
 
-  /** [[nearDupClusters]] computed by the star-alternation tier — registered
-    * against the SAME recursive-CTE oracle, so the two independent
-    * connected-components implementations are cross-checked through the
-    * hash gate. */
+  /** [[nearDupClusters]] pinned to the star-alternation tier
+    * (`localBelow = 0L`) — registered against the SAME recursive-CTE
+    * oracle, so the two independent connected-components implementations
+    * are cross-checked through the hash gate. */
   def nearDupClustersStar(s: SparkSession, dir: String): DataFrame =
-    clusterPairsStar(ngramJaccardPairs(s, dir))
+    clusterPairs(ngramJaccardPairs(s, dir), localBelow = 0L)
 
-  /** [[nearDupClusters]] computed by the round-12 bounded LOCAL tier —
-    * the THIRD independent connected-components implementation under the
-    * same recursive-CTE oracle (the tier the decision-layer increments
-    * actually run on their touched subgraphs, priced in the anchor on
-    * corpus pairs). */
+  /** [[nearDupClusters]] pinned to the bounded LOCAL tier
+    * (`localBelow = Long.MaxValue`) under the same recursive-CTE oracle
+    * (the tier the decision-layer increments actually run on their
+    * touched subgraphs, priced in the anchor on corpus pairs). */
   def nearDupClustersLocal(s: SparkSession, dir: String): DataFrame =
-    clusterPairsLocal(ngramJaccardPairs(s, dir))
+    clusterPairs(ngramJaccardPairs(s, dir), localBelow = Long.MaxValue)
 
   val nearDupClustersSql: String = {
     // embed the jaccard-pair oracle as a CTE, then a recursive reachability
@@ -4227,7 +4053,7 @@ object Dedup {
     // same tiered dispatch as [[dedupPipelineLsh]] (r18): the pipeline
     // compositions take the cost-optimal connected-components tier; the
     // three q_dedup_clusters* queries remain the per-tier showcases
-    val clusters = clusterPairsTiered(ngramJaccardPairs(s, dir)
+    val clusters = clusterPairs(ngramJaccardPairs(s, dir)
       .select(col("doc_a"), col("doc_b")))
     val removedNearDup = clusters.filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"))
@@ -4253,15 +4079,12 @@ object Dedup {
     * ([[minhashLshPairs]]); DedupSpec pins equivalence to a local
     * union-find over the same pair stream plus the exact-dup groups. */
   def dedupPipelineLsh(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
-    // clusterPairsTiered, not clusterPairs (r18): the production pair set
-    // is edge-bounded at the decision layer, and the neighbor-min loop
-    // paid O(component diameter) sequential rounds of join + checkpoint +
-    // count per run (~10 small jobs at sf0.1) where the bounded tier is
-    // ONE collect into the driver union-find (and the O(log n) star
-    // alternation past the bound). Labels are identical by the pinned
-    // tier-equivalence law (DedupSpec "local union-find tier matches the
-    // distributed tiers"); the oracle gate holds unchanged.
-    val clusters = clusterPairsTiered(
+    // the production pair set is edge-bounded at the decision layer, so
+    // the default dispatch is ONE collect into the driver union-find (and
+    // the O(log n) star alternation past the bound); labels are identical
+    // by the pinned tier-equivalence law (DedupSpec "local union-find tier
+    // matches the distributed tiers")
+    val clusters = clusterPairs(
       minhashLshPairs(s, dir, threshold).select(col("doc_a"), col("doc_b")))
     val removedNearDup = clusters.filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"))
@@ -4385,7 +4208,8 @@ object Dedup {
     // third index family: the full embedding-LSH + exact-cosine oracle
     // restricted to pairs touching the new vec_id split
     "q_dedup_embedding_inc" -> embeddingIncrementSql(),
-    // third CC tier under the SAME closure oracle as clusters/clusters_star
+    // the local tier pinned under the SAME closure oracle as
+    // clusters/clusters_star
     "q_dedup_clusters_local" -> nearDupClustersSql,
     // the whole published SemDeDup algorithm under one hash gate:
     // literal-centroid assignment, intra-cluster cosine matrix, closure,

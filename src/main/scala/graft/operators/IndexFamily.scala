@@ -176,10 +176,12 @@ object IndexFamily {
       .filter(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toString)
 
-  /** Whether `path` carries the partitioned-layout handshake. The read
-    * paths branch on this, NOT on directory shape: a legacy flat table's
-    * own data files are root-level `.parquet` and would be mistaken for
-    * an LSM delta (the round-16 compaction-crash class). */
+  /** Whether `path` carries the partitioned-layout handshake. Each table
+    * has one layout, so this only tells apart FAMILIES that share a code
+    * path (the embedding family's partitioned `vectors.parquet` vs the
+    * flat MinHash/SimHash per-doc tables). Branch on this, NOT on
+    * directory shape: a flat table's own data files are root-level
+    * `.parquet` and would be mistaken for an LSM delta. */
   def hasParts(s: SparkSession, path: String): Boolean =
     fsFor(s, path).exists(hp(partsFile(path)))
 
@@ -280,7 +282,8 @@ object IndexFamily {
         "before reading or merging this table's layout")
     val p = hp(partsFile(path))
     require(fs.exists(p),
-      s"$path has no .parts layout handshake — not a partitioned state table")
+      s"$path has no .parts layout handshake — not a partitioned state table; " +
+        "rebuild the index")
     val in = fs.open(p)
     val n = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
             finally in.close()

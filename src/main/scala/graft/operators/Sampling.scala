@@ -308,7 +308,7 @@ object Sampling {
     import graft.operators.{Dedup => D}
     val near = D.minhashLshPairs(s, dir, threshold)
       .select(col("doc_a"), col("doc_b"))
-    val labels = D.clusterPairsTiered(near.unionByName(exactDupEdges(s, dir)))
+    val labels = D.clusterPairs(near.unionByName(exactDupEdges(s, dir)))
     docs(s, dir).select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -396,7 +396,7 @@ object Sampling {
         "buildClusterState (or use leakageSafeSplit, the recompute path)")
     val exactEdges = s.read.parquet(s"$indexDir/exact_edges.parquet")
       .select(col("doc_a"), col("doc_b"))
-    val labels = D.clusterPairsTiered(starEdges.unionByName(exactEdges))
+    val labels = D.clusterPairs(starEdges.unionByName(exactEdges))
     docs(s, dir).select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),

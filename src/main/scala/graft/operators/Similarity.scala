@@ -907,8 +907,7 @@ object Similarity {
     // the meta row pins the build hyperparameters: a search with different
     // (m, subDim, k, nCentroids) would mis-index books(j·k + c) and return
     // plausible-but-wrong neighbors — annIvfPqSearch require()s agreement.
-    // 5th value: the frozen assignment depth (pre-r17 indexes lack it and
-    // load as the historical 2)
+    // 5th value: the frozen assignment depth
     (Seq(("meta", 0, Seq(m.toDouble, subDim.toDouble, k.toDouble,
         cents.length.toDouble, assignProbe.toDouble))) ++
       occ ++
@@ -969,9 +968,8 @@ object Similarity {
     require(books.length == m * k,
       s"index at $indexDir holds ${books.length} codewords, expected m*k=${m * k}")
     // 5th meta value: the build-frozen assignment depth (round-16 verdict
-    // task 3); pre-r17 indexes carry 4 values and load as the historical
-    // fixed 2 they were built with
-    (cents, books, meta.lift(4).map(_.toInt).getOrElse(2))
+    // task 3)
+    (cents, books, meta(4).toInt)
   }
 
   /** APPEND a batch of new vectors to a [[buildIvfPqIndex]]-persisted

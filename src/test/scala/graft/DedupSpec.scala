@@ -36,7 +36,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // inside the logarithmic budget — maxRounds THROWS on overrun, so this
     // passing is itself the round-count assertion
     val chain = (0L until 511L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = Dedup.clusterPairsStar(chain, maxRounds = 20).collect()
+    val labels = Dedup.clusterPairs(chain, localBelow = 0L, maxRounds = 20).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 512)
     assert(labels.values.forall(_ == 0L), "every chain node must label to the minimum")
@@ -50,16 +50,17 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val pairs = Seq((1L, 2L), (7L, 7L), (2L, 2L)).toDF("doc_a", "doc_b")
     def labelsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nbr = labelsOf(Dedup.clusterPairs(pairs))
-    val star = labelsOf(Dedup.clusterPairsStar(pairs))
-    assert(nbr == Map(1L -> 1L, 2L -> 1L, 7L -> 7L))
-    assert(star == nbr, "tiers must agree on self-pair inputs")
+    val local = labelsOf(Dedup.clusterPairs(pairs, localBelow = Long.MaxValue))
+    val star = labelsOf(Dedup.clusterPairs(pairs, localBelow = 0L))
+    assert(local == Map(1L -> 1L, 2L -> 1L, 7L -> 7L))
+    assert(star == local, "tiers must agree on self-pair inputs")
   }
 
-  test("star clustering and neighbor-min produce identical corpus labels") {
+  test("star and local clustering tiers produce identical corpus labels") {
     def lbls(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lbls(Dedup.nearDupClustersStar(spark, sf)) == lbls(Dedup.nearDupClusters(spark, sf)))
+    assert(lbls(Dedup.nearDupClustersStar(spark, sf)) ==
+      lbls(Dedup.nearDupClustersLocal(spark, sf)))
   }
 
   test("local union-find tier matches the distributed tiers, and tiered dispatches both ways") {
@@ -68,17 +69,23 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // corpus-grain agreement on the real LSH pair set
     val pairs = Dedup.minhashLshPairs(spark, sf).select("doc_a", "doc_b")
-    val star = lbls(Dedup.clusterPairsStar(pairs))
-    assert(lbls(Dedup.clusterPairsLocal(pairs)) == star)
-    // tiered: default bound -> local branch; bound 0 -> star branch; equal
-    assert(lbls(Dedup.clusterPairsTiered(pairs)) == star)
-    assert(lbls(Dedup.clusterPairsTiered(pairs, localBelow = 0L)) == star)
+    val star = lbls(Dedup.clusterPairs(pairs, localBelow = 0L))
+    assert(lbls(Dedup.clusterPairs(pairs, localBelow = Long.MaxValue)) == star)
+    // default bound -> local branch; equal to the star branch
+    assert(lbls(Dedup.clusterPairs(pairs)) == star)
+    // the dispatch boundary: exactly `localBelow` edges stay local, one
+    // edge over goes star; both sides equal
+    val nEdges = pairs.count()
+    assert(lbls(Dedup.clusterPairs(pairs, localBelow = nEdges)) == star)
+    assert(lbls(Dedup.clusterPairs(pairs, localBelow = nEdges - 1)) == star)
     // adversarial corners: self-pair singleton, chain, disjoint components
     val tricky = (Seq((7L, 7L), (9L, 9L), (20L, 30L)) ++
       (0L until 64L).map(i => (i + 100L, i + 101L))).toDF("doc_a", "doc_b")
-    assert(lbls(Dedup.clusterPairsLocal(tricky)) == lbls(Dedup.clusterPairsStar(tricky)))
+    assert(lbls(Dedup.clusterPairs(tricky, localBelow = Long.MaxValue)) ==
+      lbls(Dedup.clusterPairs(tricky, localBelow = 0L)))
     // empty edge list: empty result, correct schema
-    val empty = Dedup.clusterPairsLocal(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
+    val empty = Dedup.clusterPairs(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"),
+      localBelow = Long.MaxValue)
     assert(empty.columns.toSeq == Seq("doc_id", "cluster_id") && empty.count() == 0)
   }
 

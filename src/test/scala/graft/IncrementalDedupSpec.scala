@@ -136,7 +136,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("cluster increment == full-closure labels on components touching the batch") {
     val split = Dedup.incrementSplitAt(spark, sf)
-    val fullLabels = labelSet(Dedup.clusterPairsStar(
+    val fullLabels = labelSet(Dedup.clusterPairs(
       Dedup.minhashLshPairs(spark, sf).select(col("doc_a"), col("doc_b"))))
     val touchingClusters = fullLabels.collect {
       case (doc, c) if doc >= split => c }.toSet
@@ -224,7 +224,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     fs.create(marker, true).close()
     // the next increment repairs first, so its labels equal the
     // full-closure law regardless of the scrambled projection
-    val fullLabels = labelSet(Dedup.clusterPairsStar(
+    val fullLabels = labelSet(Dedup.clusterPairs(
       Dedup.minhashLshPairs(spark, sf).select(col("doc_a"), col("doc_b"))))
     val touching = fullLabels.collect { case (doc, c) if doc >= split => c }.toSet
     val expected = fullLabels.filter { case (_, c) => touching(c) }
@@ -234,6 +234,32 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
       s"missing=${expected.toSet -- inc.toSet} extra=${inc.toSet -- expected.toSet}")
     assert(!fs.exists(marker), "repair must clear the intent marker")
     assert(memberRows(idx) == clusterRows(idx), "projection must be rebuilt")
+  }
+
+  test("a cluster state without its members projection rebuilds it at the next increment") {
+    val idx = tmpIdx("clnoproj")
+    Dedup.buildMinhashIndex(spark,
+      docsAt(sf).filter(col("doc_id") < 150), idx, s"$idx#p0")
+    Dedup.buildClusterState(spark, idx)
+    // the crash window inside buildClusterState: labels written, the
+    // projection not yet
+    val members = new org.apache.hadoop.fs.Path(s"$idx/members.parquet")
+    val fs = members.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(members, true)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/members.parquet.parts"), false)
+    Dedup.clusterIncrement(spark,
+      docsAt(sf).filter(col("doc_id") >= 150 && col("doc_id") < 300),
+      idx, s"$idx#p1", append = true).collect()
+    assert(graft.operators.IndexFamily.partsOf(spark, s"$idx/members.parquet") > 0,
+      "the increment must rebuild the missing projection")
+    assert(memberRows(idx) == clusterRows(idx))
+    val full = tmpIdx("clnoproj-full")
+    Dedup.buildMinhashIndex(spark,
+      docsAt(sf).filter(col("doc_id") < 300), full, s"$full#all")
+    Dedup.buildClusterState(spark, full)
+    assert(clusterRows(idx) == clusterRows(full),
+      s"missing=${clusterRows(full) -- clusterRows(idx)} " +
+        s"extra=${clusterRows(idx) -- clusterRows(full)}")
   }
 
   test("pipeline increments maintain the exact state: edges and keepers converge to a full rebuild") {
@@ -295,30 +321,21 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(afterEdges.contains((base + 5, base + 0)))
   }
 
-  test("legacy flat keeper table migrates to the partitioned layout on first " +
-       "touch; appends stay equivalent; out-of-order batch warns, stays connected") {
+  test("exact-state appends converge to the one-shot build; out-of-order " +
+       "batch warns, stays connected; a keeper table without .parts is refused") {
     import spark.implicits._
     val corpus = Seq(
       (10L, "alpha body one"), (11L, "alpha body one"),   // corpus dup pair
       (12L, "beta body two"), (13L, "gamma body three")
     ).toDF("doc_id", "text")
-    val idx = tmpIdx("legacykeep")
+    val idx = tmpIdx("keepappend")
     Dedup.buildExactState(spark, corpus, idx)
     val keepersPath = s"$idx/exact_keepers.parquet"
-    // flatten to the PRE-round-16 legacy layout: plain 2-column parquet,
-    // no .parts handshake, no .maxid watermark
-    val legacyRows = spark.read.parquet(keepersPath)
-      .select(col("text_hash"), col("keep_id"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val fs = new org.apache.hadoop.fs.Path(keepersPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(keepersPath), true)
-    fs.delete(new org.apache.hadoop.fs.Path(keepersPath + ".parts"), false)
+    // a missing .maxid watermark is a normal state (re-seeded by a scan)
     fs.delete(new org.apache.hadoop.fs.Path(keepersPath + ".maxid"), false)
-    legacyRows.toDF("text_hash", "keep_id")
-      .coalesce(1).write.mode("overwrite").parquet(keepersPath)
-    // ascending append through the legacy table: must migrate once, then
-    // converge to the one-shot rebuild
+    // ascending append: converges to the one-shot rebuild
     val batch = Seq(
       (20L, "alpha body one"),     // dup of stored keeper 10
       (21L, "delta body four"),    // new hash group
@@ -330,11 +347,9 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val admitted = Dedup.appendExactState(spark, hashed, groupMin, idx)
       .collect().map(_.getLong(0)).toSet
     assert(admitted == Set(21L), s"got $admitted")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(keepersPath + ".parts")),
-      "first touch must migrate the legacy table to the partitioned layout")
     assert(fs.exists(new org.apache.hadoop.fs.Path(keepersPath + ".maxid")),
       "the append must seed/advance the ordering watermark")
-    val oneShot = tmpIdx("legacykeep-full")
+    val oneShot = tmpIdx("keepappend-full")
     Dedup.buildExactState(spark,
       corpus.unionByName(batch), oneShot)
     def keeperSet(d: String) =
@@ -356,48 +371,52 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     // 5 must be linked into the delta group via the STORED keeper 21
     assert(edgeSet(idx).contains((5L, 21L)),
       s"out-of-order arrival must connect to the stored keeper: ${edgeSet(idx)}")
+    // a keeper table without the .parts handshake (flattened to plain
+    // parquet) is refused loudly, never read as an append delta
+    fs.delete(new org.apache.hadoop.fs.Path(keepersPath), true)
+    fs.delete(new org.apache.hadoop.fs.Path(keepersPath + ".parts"), false)
+    keeperSet(oneShot).toSeq.toDF("text_hash", "keep_id")
+      .coalesce(1).write.mode("overwrite").parquet(keepersPath)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.appendExactState(spark, hashed, groupMin, idx)
+    }
+    assert(e.getMessage.contains("rebuild"), e.getMessage)
   }
 
-  test("compactIndex / compactIfNeeded on an index with a LEGACY flat keeper " +
-       "table migrate it instead of crashing, preserving the keeper set") {
+  test("compactIndex / compactIfNeeded on an index with exact state " +
+       "preserve the keeper set and fold the keeper delta") {
     import spark.implicits._
     // a near-dup index dir that ALSO carries exact state — the fullIngest
-    // composition compaction maintains (round-16 advice: foldKeeperDelta
-    // on a legacy flat table read the table's own files as a "delta" and
-    // crashed on the missing hkey column)
+    // composition compaction maintains
     val d = docsAt(sf).filter(col("doc_id") < 60)
-    val idx = tmpIdx("legacycompact")
+    val idx = tmpIdx("keepcompact")
     Dedup.buildMinhashIndex(spark, d, idx, s"$idx#b")
     Dedup.buildExactState(spark, d.select(col("doc_id"), col("text")), idx)
     val keepersPath = s"$idx/exact_keepers.parquet"
-    val before = graft.operators.IndexFamily.readSnapshot(spark, keepersPath)
-      .select(col("text_hash"), col("keep_id"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    // flatten to the PRE-round-16 legacy layout (no .parts, no sidecars)
-    val fs = new org.apache.hadoop.fs.Path(keepersPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(keepersPath), true)
-    Seq(".parts", ".maxid", ".idbloom", ".idpending").foreach(sfx =>
-      fs.delete(new org.apache.hadoop.fs.Path(keepersPath + sfx), false))
-    before.toSeq.toDF("text_hash", "keep_id")
-      .coalesce(1).write.mode("overwrite").parquet(keepersPath)
-    Dedup.compactIndex(spark, idx, nFiles = 2) // crashed before the fix
-    assert(fs.exists(new org.apache.hadoop.fs.Path(keepersPath + ".parts")),
-      "compaction must migrate the legacy keeper table to the partitioned layout")
     def keeperSet = graft.operators.IndexFamily.readSnapshot(spark, keepersPath)
       .select(col("text_hash"), col("keep_id"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(keeperSet == before, "migration must preserve the keeper set")
-    // the telemetry trigger's keeper-delta leg must also survive a
-    // re-flattened table (it calls the same fold)
-    fs.delete(new org.apache.hadoop.fs.Path(keepersPath), true)
-    Seq(".parts", ".maxid", ".idbloom", ".idpending").foreach(sfx =>
-      fs.delete(new org.apache.hadoop.fs.Path(keepersPath + sfx), false))
-    before.toSeq.toDF("text_hash", "keep_id")
-      // >1 files so the legacy table itself could be mistaken for a delta
-      .repartition(3).write.mode("overwrite").parquet(keepersPath)
+    val before = keeperSet
+    Dedup.compactIndex(spark, idx, nFiles = 2)
+    assert(keeperSet == before, "compaction must preserve the keeper set")
+    // three one-doc batches of fresh texts land three keeper delta files;
+    // the telemetry trigger's keeper-delta leg folds them
+    val fresh = (0 until 3).map(i => (1000L + i, s"fresh keeper body $i"))
+    fresh.foreach { row =>
+      val hashed = Seq(row).toDF("doc_id", "text")
+        .select(col("doc_id"), md5(col("text")).as("text_hash"))
+      Dedup.appendExactState(spark, hashed,
+        hashed.groupBy(col("text_hash")).agg(min(col("doc_id")).as("batch_min")),
+        idx).collect()
+    }
+    assert(graft.operators.IndexFamily.flatDeltaFiles(spark, keepersPath).size > 2)
     Dedup.compactIfNeeded(spark, idx, maxPartFiles = 2)
-    assert(keeperSet == before)
+    assert(graft.operators.IndexFamily.flatDeltaFiles(spark, keepersPath).isEmpty,
+      "compactIfNeeded must fold the keeper delta")
+    val freshKeepers = fresh.toDF("doc_id", "text")
+      .select(md5(col("text")), col("doc_id")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(keeperSet == before ++ freshKeepers)
   }
 
   test("keeper-probe bloom ladder: stale-HIGH never false-accepts, stored " +

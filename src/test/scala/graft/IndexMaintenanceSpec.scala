@@ -178,7 +178,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with SparkTestBase {
     val root = state.map(_._2).min
     val deleted = Set(keeper, root).toSeq
     Dedup.deleteFromSemanticIndex(spark, idxA, deleted.toDF("vec_id"))
-    Dedup.compactSemanticIndex(spark, idxA, nFiles = 2)
+    Dedup.compactSemanticIndex(spark, idxA)
     val idxB = tmpIdx("semdel-b")
     Dedup.buildSemanticIndex(spark,
       vecs.filter(col("vec_id") < split && !col("vec_id").isin(deleted: _*)), idxB, cents)
